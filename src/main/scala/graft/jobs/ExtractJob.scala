@@ -124,15 +124,7 @@ object ExtractJob {
     val sf = args.headOption.map(_.toDouble).getOrElse(0.01)
     val outTable = if (args.length > 1) args(1) else "/tmp/graft_extracted"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
     val turns = Synth.turns(spark, sf, cpus.toInt * 2)
     val t0 = System.nanoTime()
     run(spark, turns, outTable)

@@ -1,7 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-
 /** N vs 4N scaling evidence (BASELINE.md protocol): the same extraction job,
   * same input, at local[N] and local[4N] in one JVM (no real cluster in this
   * sandbox, per driver instruction). Efficiency = T(4N)/(4·T(N)) throughput
@@ -9,26 +7,11 @@ import org.apache.spark.sql.SparkSession
   * doesn't get a free compilation advantage. */
 object ScalingBench {
 
-  private def session(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Pure map-stage scaling (no salt shuffle): isolates CPU scaling from
     * local-disk shuffle throughput. */
   def runNoShuffle(cores: Int, sf: Double): (Long, Double) = {
     import org.apache.spark.sql.functions.col
-    val spark = session(cores)
+    val spark = graft.Bench.session(cores.toString)
     try {
       import spark.implicits._
       def job(s: Double) = {
@@ -49,7 +32,7 @@ object ScalingBench {
 
   /** Warmup (JIT + codegen) then measure, inside ONE session. */
   def run(cores: Int, sf: Double): (Long, Double) = {
-    val spark = session(cores)
+    val spark = graft.Bench.session(cores.toString)
     try {
       // generous warmup: C2 needs thousands of per-turn iterations per thread
       ExtractJob.extractTurns(spark,

@@ -15,10 +15,7 @@ object EvalCorpus {
       fracComment: Double,
       blockTokens: Seq[String],
       contentTokens: Seq[String],
-      commentTokens: Seq[String]) {
-    def toLine: String =
-      f"$fracContent%.1f\t$fracComment%.1f\t${blockTokens.mkString(" ")}\t${contentTokens.mkString(" ")}\t${commentTokens.mkString(" ")}"
-  }
+      commentTokens: Seq[String])
 
   def splitCorrected(corrected: String): (Seq[String], Seq[String]) = {
     val idx = corrected.indexOf(CommentsSeparator)

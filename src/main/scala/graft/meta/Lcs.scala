@@ -46,9 +46,6 @@ object Lcs {
   def diff(x: String, y: String): Seq[String] =
     diff(x.map(_.toString), y.map(_.toString))
 
-  def printDiff(x: IndexedSeq[String], y: IndexedSeq[String]): Unit =
-    println(diff(x, y).mkString("[", ", ", "]"))
-
   /** check_inclusion (lcs.pyx:78-103): v(i) = x(i) ∈ LCS(x, y). */
   def checkInclusion(x: IndexedSeq[String], y: IndexedSeq[String]): Seq[Boolean] = {
     if (y.isEmpty) return Seq.fill(x.length)(false)

@@ -305,17 +305,6 @@ object MetaExtract {
     url
   }
 
-  // ------------------------------------------------------------ sitename
-  /** extract_sitename (metadata.py:357-367): head <title> direct text. */
-  def extractSitename(tree: Node): String = {
-    val titleEl = tree.findAll(_.tag == "head").flatMap(_.findAll(_.tag == "title")).headOption
-    titleEl.flatMap(el => Option(el.text)).flatMap { t =>
-      // Python re.search without DOTALL: '.' excludes newlines
-      val m = Pattern.compile("^.*?[-|]\\s+(.*)$").matcher(t)
-      if (m.find() && m.start == 0) Some(m.group(1)) else None
-    }.orNull
-  }
-
   // ------------------------------------------------------ categories/tags
   private val CategoriesXpaths: Seq[Node => Seq[Node]] = Seq(
     t => t.findAll(n => n.tag == "div" &&

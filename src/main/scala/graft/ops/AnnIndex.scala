@@ -94,8 +94,9 @@ object AnnIndex {
     * task and ~50k rows per task, floored at `filesPerBucket` (its salt
     * spreads one bucket over that many tasks) and capped at the session's
     * parallelism — small indexes write in a few tasks, big ones keep the
-    * cluster busy. File count per bucket is unchanged (the repartition
-    * stays keyed on bucket + salt). */
+    * cluster busy. Each bucket gets at most `filesPerBucket` files (the
+    * repartition stays keyed on bucket + salt, and the task cap can fall
+    * below the salt count). */
   private def writeTasks(spark: SparkSession, nRows: Long, nBuckets: Int,
       filesPerBucket: Int): Int =
     math.min(spark.sparkContext.defaultParallelism.toLong,

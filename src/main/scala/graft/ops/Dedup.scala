@@ -485,18 +485,6 @@ object Dedup {
     h
   }
 
-  /** DuckDB `md5_number_upper` semantics: FIRST 8 bytes of the md5 digest,
-    * little-endian — the second independent 64-bit draw from one digest
-    * (the Kirsch-Mitzenmacher pair used by the CMS sketch). */
-  def md5Upper64(tok: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(tok.getBytes("UTF-8"))
-    var h = 0L
-    var i = 7
-    while (i >= 0) { h = (h << 8) | (d(i) & 0xffL); i -= 1 }
-    h
-  }
-
   /** Oracle-checkable simhash: same bit-aggregation math, md5 token hash. */
   def simhashMd5(text: String): Long = simhashWith(text, md5Lower64)
 

@@ -19,8 +19,8 @@ object Par {
   /** Evaluate two independent expressions concurrently. */
   def eval2[A, B](a: => A, b: => B): (A, B) = {
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    // zip fails as soon as either side fails: a fast failure in `b` does
+    // not wait on a slow `a`
+    Await.result(Future(a).zip(Future(b)), Duration.Inf)
   }
 }

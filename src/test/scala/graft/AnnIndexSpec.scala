@@ -1,30 +1,16 @@
 package graft
 
 import graft.ops.{AnnIndex, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The persisted ANN index must (a) agree exactly with the ad-hoc
   * lshTopK/ivfTopK scan forms, and (b) prove partition pruning: the probe's
   * scan must carry the bucket predicate as a PartitionFilter and touch only
   * the probed bucket directories — the property that makes it an index at
   * 100 TB rather than a full scan per query. */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val tmp = java.nio.file.Files.createTempDirectory("graft_annidx").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
   private def queryVec = emb.orderBy("vec_id").select("embedding").head

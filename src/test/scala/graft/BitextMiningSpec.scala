@@ -1,26 +1,11 @@
 package graft
 
 import graft.ops.BitextMining
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Margin mining pinned by hand: normalizer folds, mutual-best gating,
   * the margin expression, and the threshold on the rounded value. */
-class BitextMiningSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BitextMiningSpec extends AnyFunSuite with SparkSuite {
 
   // src1=(1,0) twins tgt10; src2=(0,1) best-matches tgt11=(.6,.8).
   // tgt13=(.8,.6) ranks 2nd for BOTH src queries (its own best is src1,

@@ -1,27 +1,12 @@
 package graft
 
 import graft.ops.{BloomDedup, Dedup}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Sharded Bloom-filter dedup gate: no false negatives, exact composed
   * output, bit-identical append, measured fp rate. */
-class BloomDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BloomDedupSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(ids: Seq[Long], tag: String) = {
     val sp = spark; import sp.implicits._

@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.Bm25
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** BM25 retrieval: postings must be integer-exact, scores must match a
   * hand-computed reference, ranking must self-retrieve, and the scoring
   * plan must never shuffle the postings (broadcast-only joins). */
-class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class Bm25Spec extends AnyFunSuite with SparkSuite {
 
   private def docs = {
     val sp = spark; import sp.implicits._

@@ -1,35 +1,27 @@
 package graft
 
 import graft.table.Bucketed
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The bucketed-layout contract: co-bucketed tables join and aggregate
   * with zero exchanges, and the layout never changes results — only the
   * plan. The counterfactual (same data as plain parquet) is pinned to
   * HAVE exchanges, so the assertion can't pass vacuously. */
-class BucketedSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val base =
     s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_spec"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     graft.util.Fs.rmrf(base)
   }
 
-  override def afterAll(): Unit = if (spark != null) {
-    Seq("bspec_ev", "bspec_tot").foreach(n =>
+  override def afterAll(): Unit = {
+    if (spark != null) Seq("bspec_ev", "bspec_tot").foreach(n =>
       spark.sql(s"DROP TABLE IF EXISTS `$n`"))
-    spark.stop()
+    super.afterAll()
   }
 
   private def mkData() = {

@@ -1,27 +1,12 @@
 package graft
 
 import graft.ops.Chunking
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Token-window chunking: placements must cover every token, overlap by
   * exactly `overlap` between neighbors, right-align the last window, and
   * reassemble to the original token stream. */
-class ChunkingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ChunkingSpec extends AnyFunSuite with SparkSuite {
 
   private def doc(n: Int) = {
     val sp = spark; import sp.implicits._

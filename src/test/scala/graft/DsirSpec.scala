@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.Dsir
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** DSIR importance resampling: weights must rank target-like docs above
   * dissimilar ones, scoring must be a single map pass (no exchange), and
   * the Gumbel resample must be reproducible and without replacement. */
-class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DsirSpec extends AnyFunSuite with SparkSuite {
 
   private def df(rows: Seq[(Long, String)]) = {
     val sp = spark; import sp.implicits._

@@ -1,25 +1,10 @@
 package graft
 
 import graft.ops.{C4Filters, Pii}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** PII scrubbing and C4 line/document heuristics on crafted fixtures. */
-class FiltersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FiltersSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import org.apache.spark.sql.types._

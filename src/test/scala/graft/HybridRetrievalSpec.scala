@@ -1,29 +1,16 @@
 package graft
 
 import graft.ops.HybridRetrieval
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** RRF fusion semantics pinned by hand: both-arm docs sum two terms,
   * single-arm docs carry one term and a null rank for the other, the
   * fused ordering follows 1/(k0+r) arithmetic exactly, and the dense arm
   * plans the broadcast + map-side partial top-k it claims. */
-class HybridRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 8
 
   test("fuse matches hand-computed RRF, nulls ride single-arm docs") {
     val sp = spark; import sp.implicits._

@@ -1,26 +1,11 @@
 package graft
 
 import graft.ops.KMeansDist
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Distributed Lloyd's: assignment map-side, update as one (cell, dim)
   * keyed exchange, model collected bounded by k*dim. */
-class KMeansDistSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class KMeansDistSpec extends AnyFunSuite with SparkSuite {
 
   /** Three well-separated 4-dim blobs, 30 points each, small jitter. */
   private def blobs(partitions: Int = 4) = {

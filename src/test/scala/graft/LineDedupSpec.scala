@@ -1,27 +1,12 @@
 package graft
 
 import graft.ops.LineDedup
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Line-level corpus dedup (CCNet/RefinedWeb boilerplate pass): a trimmed
   * non-empty line occurring minCount+ times corpus-wide is dropped from
   * every document; survivors rejoin in original order. */
-class LineDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LineDedupSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import org.apache.spark.sql.types._

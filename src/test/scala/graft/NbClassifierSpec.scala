@@ -1,26 +1,11 @@
 package graft
 
 import graft.ops.NbClassifier
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Multinomial Naive Bayes: model-as-DataFrame trainer + join scorer.
   * Smoothing/prior/fold contract pinned by hand-computed expectations. */
-class NbClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NbClassifierSpec extends AnyFunSuite with SparkSuite {
 
   private def df(rows: Seq[(Long, String, String)]) = {
     val s = spark

@@ -1,26 +1,11 @@
 package graft
 
 import graft.ops.NgramLm
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Bigram LM scoring: hand-checked counts and likelihoods on a toy corpus,
   * smoothing for unseen events, and bit-determinism across partitionings. */
-class NgramLmSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NgramLmSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import org.apache.spark.sql.types._

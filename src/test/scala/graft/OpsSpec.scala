@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Correctness of the training-data-pipeline operators on controlled data:
   * planted near-duplicates must be found, distinct docs must not pair,
   * LSH ANN must agree with brute force on the probed region. */
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OpsSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import org.apache.spark.sql.types._

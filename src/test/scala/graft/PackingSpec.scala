@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.{Packing, Sampling}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Sequence packing and temperature mixing: placements are a pure integer
   * function of (corpus, salt, capacity), budgets are integer-exact, and
   * the two-pass prefix-sum plan equals the single-window contract. */
-class PackingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PackingSpec extends AnyFunSuite with SparkSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

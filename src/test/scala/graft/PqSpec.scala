@@ -1,27 +1,12 @@
 package graft
 
 import graft.ops.Pq
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Product quantization: codes are a pure function of the vector, the
   * ADC distance is the distance to the reconstruction, and the scan
   * ranks by it — so planted duplicates of the query are unbeatable. */
-class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PqSpec extends AnyFunSuite with SparkSuite {
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     .select("vec_id", "embedding")

@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.RetrievalEval
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** TREC conventions pinned by hand: rr = 1/first relevant rank (0 when
   * none retrieved), recall = hits/|qrels|, unjudged queries unscored,
   * failed queries scored zero, summary means in query_id fold order. */
-class RetrievalEvalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RetrievalEvalSpec extends AnyFunSuite with SparkSuite {
 
   private def fixtures = {
     val sp = spark; import sp.implicits._

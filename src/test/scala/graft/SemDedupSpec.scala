@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.{SemDedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** SemDeDup: cluster-then-compare semantic dedup over embeddings.
   * Identical vectors share a cell deterministically (assignment is a pure
   * function of the vector), so planted copies give exact expectations. */
-class SemDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SemDedupSpec extends AnyFunSuite with SparkSuite {
 
   /** n deterministic unit vectors, dim 8, plus an id-shifted copy of the
     * first `nPlanted` (ids offset by 10000). */

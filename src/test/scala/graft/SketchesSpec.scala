@@ -1,29 +1,14 @@
 package graft
 
 import graft.ops.{Dedup, Sketches}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Mergeable sketches: HLL registers and CMS counters must merge to
   * exactly the global sketch (the incremental-stats contract), the HLL
   * estimate must land inside its error bound on both estimator branches,
   * and CMS must never underestimate. */
-class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SketchesSpec extends AnyFunSuite with SparkSuite {
 
   private def keys(n: Int, prefix: String = "k") = {
     val sp = spark; import sp.implicits._

@@ -2,26 +2,12 @@ package graft
 
 import graft.jobs.Synth
 import graft.sources.TurnsSource
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 
 /** Turns ingestion across source formats: parquet / jsonl / csv round-trip
   * with schema enforcement and key-integrity filtering. */
-class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SourcesSpec extends AnyFunSuite with SparkSuite {
 
   private def rmrf(p: String): Unit = graft.util.Fs.rmrf(p)
 

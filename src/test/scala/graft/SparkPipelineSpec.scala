@@ -3,31 +3,14 @@ package graft
 import graft.jobs.{ExtractJob, Synth}
 import graft.pipeline.Extract
 import graft.table.TranscriptTable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 
 /** Tier-2/Tier-4 (SURVEY.md §5.2): distributed pipeline equality vs the
   * direct per-turn function, stable turn ordering, checkpoint/resume
   * idempotence, lineage completeness. */
-class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private def rmrf(p: String): Unit = graft.util.Fs.rmrf(p)
 
@@ -562,18 +545,29 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("typed lineage aggregator merges across partitions") {
-    import graft.ops.LineageAgg
-    import org.apache.spark.sql.{Encoder, Encoders}
-    implicit val rowEnc: Encoder[LineageAgg.LineageRow] = Encoders.product
+  test("production lineage digest merges across partitions") {
+    // ExtractJob.lineage's per-bucket counts and bit_xor digest must not
+    // depend on how the rescanned batch is partitioned
+    val sp = spark; import sp.implicits._
     val rows = (0 until 1000).map(i =>
-      LineageAgg.LineageRow(s"c${i % 7}", i, if (i % 3 == 0) null else s"content$i"))
-    val ds1 = spark.createDataset(rows)(rowEnc).repartition(1)
-    val ds8 = spark.createDataset(rows)(rowEnc).repartition(8)
-    val a1 = ds1.select(LineageAgg.aggregator.toColumn).head
-    val a8 = ds8.select(LineageAgg.aggregator.toColumn).head
-    assert(a1 == a8, "digest must be partitioning-independent")
-    assert(a1.nTurns == 1000 && a1.nContent == rows.count(_.content != null))
+      (s"c${i % 7}", i, i % 5, if (i % 3 == 0) null else s"content$i"))
+    def lineageAt(parts: Int) = {
+      val batch = rows.toDF("conv_id", "turn_idx", "n_blocks", "content")
+        .repartition(parts)
+        .select(col("conv_id"), col("turn_idx"),
+          ExtractJob.bucketCol.as("conv_bucket"),
+          struct(col("n_blocks").as("nBlocks"), col("content"),
+            lit(null).cast("string").as("error")).as("ex"))
+      ExtractJob.lineage(batch, "b000")
+        .select("conv_bucket", "n_turns", "n_content_nonnull", "content_digest")
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._1).toSeq
+    }
+    val l1 = lineageAt(1)
+    assert(l1 == lineageAt(8), "digest must be partitioning-independent")
+    assert(l1.map(_._2).sum == 1000)
+    assert(l1.map(_._3).sum == rows.count(_._4 != null))
+    assert(l1.exists(_._4 != 0L))
   }
 
   test("set ops: anti-join fixture diff finds no drift") {

@@ -3,31 +3,14 @@ package graft
 import graft.jobs.Synth
 import graft.streaming.StreamingExtract
 import graft.table.TranscriptTable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 
 /** Structured Streaming ingest: file-source stream of turns -> the same
   * fused extraction -> manifest-committed table; exactly-once through the
   * idempotent per-micro-batch manifest commit; watermarked aggregation. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private def rmrf(p: String): Unit = graft.util.Fs.rmrf(p)
 

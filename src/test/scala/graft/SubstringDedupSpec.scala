@@ -1,27 +1,12 @@
 package graft
 
 import graft.ops.SubstringDedup
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Exact-substring dedup (Lee et al. 2021 ExactSubstr semantics): a token
   * run of length >= n occurring more than once corpus-wide is a duplicated
   * span; ALL occurrences are cut. Spans are maximal and non-overlapping. */
-class SubstringDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SubstringDedupSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import org.apache.spark.sql.types._

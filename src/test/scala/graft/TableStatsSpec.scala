@@ -1,27 +1,12 @@
 package graft
 
 import graft.table.{FileStats, TranscriptTable => TT}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** File-level column bounds in manifests + manifest-pruned range reads +
   * clustering compaction — the Iceberg data-skipping model. */
-class TableStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TableStatsSpec extends AnyFunSuite with SparkSuite {
 
   private def freshTable(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString + "/t"

@@ -1,28 +1,13 @@
 package graft
 
 import graft.ops.ThresholdSweep
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The binned classifier sweep pinned by hand: per-bin counts, top-down
   * cumulative tp/fp, every guarded ratio, and the fixed-order ROC-AUC
   * trapezoid — plus the boundedness that makes it the 100 TB shape. */
-class ThresholdSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ThresholdSweepSpec extends AnyFunSuite with SparkSuite {
 
   private def handCase = {
     val sp = spark; import sp.implicits._

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins the hot-key-safety of every `row_number().over(partitionBy(key))
   * .filter(rank <= k)` site in the repo: Spark's InferWindowGroupLimit must
@@ -20,20 +18,9 @@ import org.scalatest.BeforeAndAfterAll
   * (spark.sql.optimizer.windowGroupLimitThreshold, default 1000 — all our
   * k values sit far below it) ever stops the rule from firing, this spec
   * is the tripwire that says the decision needs revisiting. */
-class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TopKSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 8
 
   /** Partial WindowGroupLimit strictly below the exchange, Final above. */
   private def assertTwoStage(plan: String, label: String): Unit = {
