@@ -165,10 +165,13 @@ object SparkEntry {
       df.repartition(1).sortWithinPartitions((c +: cs): _*)
   }
 
-  /** sfDir like "/root/testdata/sf0.01" -> 0.01 (synth transcript scale). */
+  /** sfDir like "/root/testdata/sf0.01" -> 0.01 (synth transcript scale).
+    * A dir whose name carries no `sf<number>` is rejected: a silent default
+    * would run the Synth-backed queries at the wrong scale. */
   def sfOf(dir: String): Double = {
     val m = java.util.regex.Pattern.compile("sf([0-9.]+)").matcher(dir)
-    if (m.find()) m.group(1).toDouble else 0.001
+    if (m.find()) m.group(1).toDouble
+    else throw new IllegalArgumentException(s"no sf<number> scale in data dir name: $dir")
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:

@@ -2,9 +2,14 @@ package graft.jobs
 
 import graft.pipeline.{Extract, Extracted}
 import graft.table.TranscriptTable
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 final case class TurnB(conv_id: String, turn_idx: Int, role: String,
     text: String, tool: String, ts: Timestamp, conv_bucket: Int)
@@ -19,6 +24,48 @@ final case class ExtractedTurn(
     conv_bucket: Int,
     ex: Extracted)
 
+/** Folds a batch's rows into its per-bucket lineage. An input is one row's
+  * (conv_bucket, ex.nBlocks, content set, error set, content hash); buffer
+  * and output are a flat `Buckets × Slots` long array. Counts add and
+  * digests XOR, so partial buffers merge in any order. */
+private[graft] object LineageAgg
+    extends Aggregator[(Int, Int, Boolean, Boolean, Long), Array[Long], Array[Long]] {
+
+  /** Slots per bucket: n_turns, n_blocks, n_content_nonnull, n_errors,
+    * content_digest (the last XORs, the others add). */
+  val Slots = 5
+
+  def zero: Array[Long] = new Array[Long](ExtractJob.Buckets * Slots)
+
+  def reduce(b: Array[Long], in: (Int, Int, Boolean, Boolean, Long)): Array[Long] = {
+    val o = in._1 * Slots
+    b(o) += 1
+    b(o + 1) += in._2
+    if (in._3) b(o + 2) += 1
+    if (in._4) b(o + 3) += 1
+    b(o + 4) ^= in._5
+    b
+  }
+
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) {
+      a(i) = if (i % Slots == Slots - 1) a(i) ^ b(i) else a(i) + b(i)
+      i += 1
+    }
+    a
+  }
+
+  def finish(b: Array[Long]): Array[Long] = b
+  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+}
+
+/** One `_lineage` row: counts and the order-independent xxhash64 XOR digest
+  * over (conv_id, turn_idx, content) of one (batch, conv_bucket). */
+final case class LineageRow(conv_bucket: Int, n_turns: Long, n_blocks: Long,
+    n_content_nonnull: Long, n_errors: Long, content_digest: Long, batch_id: String)
+
 /** The production extraction job (SURVEY.md §3.1 Spark shape):
   *
   *   read turns (column-pruned scan: conv_id, turn_idx, role, text, tool, ts)
@@ -27,8 +74,9 @@ final case class ExtractedTurn(
   *   → mapPartitions Extract.extract          (fused stages 2,4-8; no shuffle)
   *   → repartitionByRange(conv_id, turn_idx)
   *     .sortWithinPartitions                  (shuffle #2, stable turn order)
-  *   → TranscriptTable.writeBatch             (atomic manifest commit)
-  *   → lineage/metrics groupBy(conv_bucket)   (shuffle #3, tiny)
+  *   → observe(per-bucket lineage)            (in the write's result stage)
+  *   → TranscriptTable.writeData              (staged, invisible)
+  *   → commitStaged: lineage rows + manifest  (driver-built, atomic commit)
   *
   * The extraction map is a pure per-turn function — embarrassingly parallel —
   * which is what makes ≥0.8 N→4N scaling efficiency achievable. Batches are
@@ -37,7 +85,7 @@ object ExtractJob {
 
   val Buckets = 64
 
-  def bucketCol: org.apache.spark.sql.Column =
+  def bucketCol: Column =
     pmod(xxhash64(col("conv_id")), lit(Buckets)).cast("int")
 
   def extractTurns(spark: SparkSession, turns: DataFrame, saltPartitions: Int): Dataset[ExtractedTurn] = {
@@ -58,19 +106,42 @@ object ExtractJob {
       }
   }
 
-  /** Lineage + metrics rows per (batch, conv_bucket): counts and an
-    * order-independent xxhash64 XOR digest over (conv_id, turn_idx, content)
-    * — cheap at 10^12 rows, no sort needed (FIXTURES.md §3.3). */
-  def lineage(out: DataFrame, batchId: String): DataFrame = {
-    out.groupBy(col("conv_bucket"))
-      .agg(
-        count(lit(1)).as("n_turns"),
-        sum(col("ex.nBlocks")).as("n_blocks"),
-        count(col("ex.content")).as("n_content_nonnull"),
-        count(col("ex.error")).as("n_errors"),
-        // BIT_XOR aggregate of row hashes: order-independent, mergeable
-        expr("bit_xor(xxhash64(conv_id, turn_idx, coalesce(ex.content, '')))").as("content_digest"))
-      .withColumn("batch_id", lit(batchId))
+  /** The per-bucket lineage aggregate over extracted rows, as a flat
+    * `Buckets × LineageAgg.Slots` array. The digest input is Spark's own
+    * `xxhash64(conv_id, turn_idx, coalesce(ex.content, ''))`, so it is
+    * cheap at 10^12 rows and needs no sort (FIXTURES.md §3.3). */
+  def lineageColumn: Column =
+    udaf(LineageAgg).apply(col("conv_bucket"), coalesce(col("ex.nBlocks"), lit(0)),
+      col("ex.content").isNotNull, col("ex.error").isNotNull,
+      xxhash64(col("conv_id"), col("turn_idx"), coalesce(col("ex.content"), lit(""))))
+      .as("lineage")
+
+  /** The lineage an `observe(obs, lineageColumn)` saw, once its action ends.
+    * The observation is reported when the action's query completes; a
+    * bounded wait turns one that never arrives into an error, and the batch
+    * stays uncommitted. */
+  def observedLineage(obs: Observation): Seq[Long] =
+    Await.result(obs.future, 10.minutes).getAs[Seq[Long]]("lineage")
+
+  /** Extract `turns`, range-order them by (conv_id, turn_idx) and stage
+    * them as batch `batchId`: the data files are written and the batch
+    * stays invisible until [[commitStaged]]. Returns the lineage the write
+    * observed and the schema it wrote.
+    *
+    * Scale-safe, exactly-once lineage: extraction runs once, streamed
+    * straight to parquet (no whole-batch cache, which at 100 TB would
+    * double I/O), and the lineage is folded by the write job itself. The
+    * aggregate sits after the sort, so it runs in the write's result stage,
+    * and Spark applies a result task's accumulator updates once per
+    * partition: a retried or speculative task cannot count a row twice. */
+  def stage(spark: SparkSession, turns: DataFrame, parts: Int, outTable: String,
+      batchId: String): (Seq[Long], StructType) = {
+    val ordered = extractTurns(spark, turns, parts).toDF()
+      .repartitionByRange(math.max(1, parts / 4), col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions("conv_id", "turn_idx")
+    val obs = Observation()
+    TranscriptTable.writeData(ordered.observe(obs, lineageColumn), outTable, batchId)
+    (observedLineage(obs), ordered.schema)
   }
 
   /** Run extraction over a turns DataFrame into an Iceberg-like table,
@@ -87,37 +158,32 @@ object ExtractJob {
         val lo = b * perBatch
         val hi = math.min((b + 1) * perBatch, Buckets)
         val slice = withBucket.filter(col("conv_bucket") >= lo && col("conv_bucket") < hi)
-        val extracted = extractTurns(spark, slice, parts)
-        val ordered = extracted.toDF()
-          .repartitionByRange(math.max(1, parts / 4), col("conv_id"), col("turn_idx"))
-          .sortWithinPartitions("conv_id", "turn_idx")
-        // scale-safe lineage: stage the data files first (extraction runs
-        // exactly once, streamed straight to parquet — no whole-batch cache,
-        // which at 100 TB would double I/O), then derive lineage by
-        // re-scanning the just-written files. That scan is columnar and
-        // narrow (5 scalar columns + ex.content), a tiny fraction of the
-        // written bytes. The batch stays invisible until commit.
-        TranscriptTable.writeData(ordered, outTable, batchId)
-        commitStaged(spark, outTable, batchId)
+        val (lineage, schema) = stage(spark, slice, parts, outTable, batchId)
+        commitStaged(spark, outTable, batchId, lineage, schema)
       }
     }
   }
 
-  /** Derive lineage from a STAGED batch's parquet (narrow columnar re-scan)
-    * and CAS-commit it — the tail of the batch loop, shared verbatim with
-    * the streaming foreachBatch path so both ingest modes get the same
-    * manifest shape (lineage summary + n_turns) and resume story. */
-  def commitStaged(spark: SparkSession, outTable: String, batchId: String): Unit = {
-    val written = spark.read.parquet(TranscriptTable.dataDir(outTable, batchId))
-    val linDf = lineage(written, batchId)
-    val lin = linDf.collect() // <= Buckets rows
-    val linStr = lin.sortBy(_.getAs[Int]("conv_bucket")).map(r =>
-      s"${r.getAs[Int]("conv_bucket")}:${r.getAs[Long]("n_turns")}:${r.getAs[Long]("content_digest")}")
-      .mkString(";")
-    TranscriptTable.commitWithLineage(linDf, outTable, batchId,
-      Map("lineage" -> linStr,
-          "n_turns" -> lin.map(_.getAs[Long]("n_turns")).sum.toString,
-          "schema" -> written.schema.json))
+  /** CAS-commit a STAGED batch with the lineage its write observed: one
+    * `_lineage` row per non-empty bucket, built on the driver and written
+    * as one small local parquet file, and the written schema as a reader
+    * sees it (every field nullable). No byte of the batch is read back.
+    * The tail of the batch loop, shared verbatim with the streaming
+    * foreachBatch path so both ingest modes get the same manifest shape
+    * (lineage summary + n_turns) and resume story. */
+  def commitStaged(spark: SparkSession, outTable: String, batchId: String,
+      lineage: Seq[Long], schema: StructType): Unit = {
+    import spark.implicits._
+    val S = LineageAgg.Slots
+    val rows = (0 until Buckets).filter(b => lineage(b * S) > 0).map { b =>
+      val o = b * S
+      LineageRow(b, lineage(o), lineage(o + 1), lineage(o + 2), lineage(o + 3),
+        lineage(o + 4), batchId)
+    }
+    TranscriptTable.commitWithLineage(rows.toDF().coalesce(1), outTable, batchId,
+      Map("lineage" -> rows.map(r => s"${r.conv_bucket}:${r.n_turns}:${r.content_digest}").mkString(";"),
+          "n_turns" -> rows.map(_.n_turns).sum.toString,
+          "schema" -> TranscriptTable.relaxNullable(schema).json))
   }
 
   def main(args: Array[String]): Unit = {
@@ -126,11 +192,13 @@ object ExtractJob {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = graft.Bench.session(cpus)
     val turns = Synth.turns(spark, sf, cpus.toInt * 2)
+    // a resume skips committed batches: rate only the turns this run commits
+    val before = TranscriptTable.committedRowCount(outTable)
     val t0 = System.nanoTime()
     run(spark, turns, outTable)
     val secs = (System.nanoTime() - t0) / 1e9
-    val n = TranscriptTable.read(spark, outTable).count()
-    println(f"extracted $n turns in $secs%.1f s (${n / secs}%.1f turns/s)")
+    val n = TranscriptTable.committedRowCount(outTable) - before
+    println(f"extracted $n new turns in $secs%.1f s (${n / secs}%.1f turns/s)")
     spark.stop()
   }
 }

@@ -19,8 +19,9 @@ object StreamingExtract {
   /** Start extraction over a streaming turns DataFrame (schema: conv_id,
     * turn_idx, role, text, tool, ts). Each micro-batch runs the SAME
     * stage-then-commit flow as the batch job ([[ExtractJob.run]]): salted
-    * extraction → range-ordered staged write → lineage re-scan →
-    * CAS manifest commit carrying the lineage summary + n_turns. Streaming
+    * extraction → range-ordered staged write that observes the batch's
+    * lineage → CAS manifest commit carrying the lineage summary + n_turns
+    * (no re-scan of the written files). Streaming
     * ingest therefore gets the identical exactly-once + resume story:
     * Spark's checkpoint replays a batch id after a crash, `isCommitted`
     * no-ops committed replays, and a batch killed in the staged-but-
@@ -36,14 +37,10 @@ object StreamingExtract {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val bid = f"s$batchId%06d"
         if (!TranscriptTable.isCommitted(outTable, bid)) {
-          val parts = spark.sparkContext.defaultParallelism
-          val extracted = ExtractJob.extractTurns(spark, batch, parts)
-          val ordered = extracted.toDF()
-            .repartitionByRange(math.max(1, parts / 4), col("conv_id"), col("turn_idx"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-          TranscriptTable.writeData(ordered, outTable, bid)
+          val (lineage, schema) = ExtractJob.stage(spark, batch,
+            spark.sparkContext.defaultParallelism, outTable, bid)
           crashHook(batchId)
-          ExtractJob.commitStaged(spark, outTable, bid)
+          ExtractJob.commitStaged(spark, outTable, bid, lineage, schema)
         }
       }
       .trigger(Trigger.AvailableNow())

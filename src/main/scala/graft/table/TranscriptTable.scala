@@ -79,9 +79,9 @@ object TranscriptTable {
         FileStats.collect(spark, dataDir(table, batchId), statsCols)))
 
   /** Stage the data files of one batch WITHOUT committing: the batch stays
-    * invisible (no manifest) until [[commit]] flips it. Lets callers derive
-    * lineage/metrics by re-scanning the just-written parquet — a narrow
-    * columnar read — instead of caching the whole in-flight batch. */
+    * invisible (no manifest) until [[commit]] flips it. Lets callers fold
+    * lineage/metrics inside the write job (`Dataset.observe`) and commit
+    * them afterwards, instead of caching the whole in-flight batch. */
   def writeData(df: DataFrame, table: String, batchId: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(dataDir(table, batchId))
 
@@ -220,7 +220,7 @@ object TranscriptTable {
   /** A string-valued manifest entry, unescaped. Scanned manually — a
     * `(?:[^"\\]|\\.)*` regex stack-overflows on multi-KB values
     * (backtracking frame per character). */
-  private def manifestValue(table: String, batchId: String,
+  private[graft] def manifestValue(table: String, batchId: String,
       key: String): Option[String] = {
     val json = manifestJson(table, batchId)
     val marker = "\"" + key + "\": \""
@@ -273,8 +273,8 @@ object TranscriptTable {
     * Batch schemas reach the manifest through two paths that disagree ONLY
     * in these flags — writeBatch records the pre-write `df.schema` (nested
     * flags as constructed, often containsNull=false), while commitStaged
-    * records a post-parquet-read schema (Spark normalizes nested fields to
-    * nullable) — so schema COMPARISON must be nullability-insensitive and
+    * records the schema a parquet reader sees (this relaxed form) — so
+    * schema COMPARISON must be nullability-insensitive and
     * the resolved union must store the relaxed form, or two logically
     * identical batches would fail the ADDING-only check and brick reads. */
   private[graft] def relaxNullable(dt: org.apache.spark.sql.types.DataType)

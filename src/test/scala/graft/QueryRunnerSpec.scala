@@ -13,11 +13,14 @@ class QueryRunnerSpec extends AnyFunSuite with SparkSuite {
   // q1_pricing throws because the dir holds no lineitem table
   private lazy val dir = Files.createTempDirectory("runner_sf0.001_").toString
 
-  private def capture(mode: String, names: String*): (Int, String) = {
+  private def captureIn(d: String, mode: String, names: String*): (Int, String) = {
     val out = new ByteArrayOutputStream
-    val status = Console.withOut(out)(QueryRunner.run(spark, mode, names, dir, 1))
+    val status = Console.withOut(out)(QueryRunner.run(spark, mode, names, d, 1))
     (status, out.toString("UTF-8"))
   }
+
+  private def capture(mode: String, names: String*): (Int, String) =
+    captureIn(dir, mode, names: _*)
 
   test("rows: row count for a real query, failed marker for a throwing one") {
     val (status, out) = capture("rows", "x_extract_turns", "q1_pricing")
@@ -38,5 +41,16 @@ class QueryRunnerSpec extends AnyFunSuite with SparkSuite {
     val (status, out) = capture("plan", "x_extract_turns")
     assert(status == 0, out)
     assert(out.contains("## x_extract_turns") && out.contains("Physical Plan"), out)
+  }
+
+  test("a data dir without an sf<number> scale is rejected, not run at a default") {
+    val unscaled = Files.createTempDirectory("runner_unscaled_").toString
+    val e = intercept[IllegalArgumentException](SparkEntry.sfOf(unscaled))
+    assert(e.getMessage.contains(unscaled), e.getMessage)
+    assert(SparkEntry.sfOf("/data/sf0.01") == 0.01)
+    // a Synth-backed query over that dir fails instead of running at sf0.001
+    val (status, out) = captureIn(unscaled, "rows", "x_extract_turns")
+    assert(status == 1, out)
+    assert(out.contains("x_extract_turns failed"), out)
   }
 }

@@ -1,11 +1,14 @@
 package graft
 
-import graft.jobs.{ExtractJob, Synth}
+import graft.jobs.{ExtractJob, LineageAgg, LineageRow, Synth}
 import graft.pipeline.Extract
 import graft.table.TranscriptTable
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 /** Tier-2/Tier-4 (SURVEY.md §5.2): distributed pipeline equality vs the
   * direct per-turn function, stable turn ordering, checkpoint/resume
@@ -546,8 +549,8 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("production lineage digest merges across partitions") {
-    // ExtractJob.lineage's per-bucket counts and bit_xor digest must not
-    // depend on how the rescanned batch is partitioned
+    // the observed lineage aggregate's per-bucket counts and XOR digest
+    // must not depend on how the observed rows are partitioned
     val sp = spark; import sp.implicits._
     val rows = (0 until 1000).map(i =>
       (s"c${i % 7}", i, i % 5, if (i % 3 == 0) null else s"content$i"))
@@ -558,16 +561,61 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
           ExtractJob.bucketCol.as("conv_bucket"),
           struct(col("n_blocks").as("nBlocks"), col("content"),
             lit(null).cast("string").as("error")).as("ex"))
-      ExtractJob.lineage(batch, "b000")
-        .select("conv_bucket", "n_turns", "n_content_nonnull", "content_digest")
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
+      val obs = Observation()
+      batch.observe(obs, ExtractJob.lineageColumn).write.format("noop").mode("overwrite").save()
+      ExtractJob.observedLineage(obs).grouped(LineageAgg.Slots).toSeq
     }
     val l1 = lineageAt(1)
     assert(l1 == lineageAt(8), "digest must be partitioning-independent")
-    assert(l1.map(_._2).sum == 1000)
-    assert(l1.map(_._3).sum == rows.count(_._4 != null))
-    assert(l1.exists(_._4 != 0L))
+    assert(l1.map(_(0)).sum == 1000)
+    assert(l1.map(_(1)).sum == rows.map(_._3.toLong).sum)
+    assert(l1.map(_(2)).sum == rows.count(_._4 != null))
+    assert(l1.map(_(3)).sum == 0)
+    assert(l1.exists(_(4) != 0L))
+  }
+
+  test("observed lineage equals a rescan of the written batches") {
+    // the lineage each write job observes must be what a rescan of its
+    // files computes with the SQL aggregate: same _lineage rows, manifest
+    // lineage string, n_turns and schema. 64 batches at sf0.001 leave many
+    // empty; a planted empty page fails blockify and must count as an error.
+    val out = "/tmp/graft_observed_lineage"
+    rmrf(out)
+    val sp = spark; import sp.implicits._
+    val synth = Synth.turns(spark, 0.001, 4)
+    val planted = Seq(("planted-error", 0, "user", "", "none", new java.sql.Timestamp(0L)))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val turns = synth.unionByName(planted)
+    // bounded: an observation that never arrives fails instead of hanging
+    Await.result(Future(ExtractJob.run(spark, turns, out, nBatches = 64, saltPartitions = 8))(
+      ExecutionContext.global), 5.minutes)
+    val batches = TranscriptTable.committedBatches(out)
+    assert(batches.length == 64)
+    val perBatch = batches.map { b =>
+      val written = spark.read.parquet(TranscriptTable.dataDir(out, b))
+      val want = written.groupBy(col("conv_bucket"))
+        .agg(
+          count(lit(1)).as("n_turns"),
+          sum(col("ex.nBlocks")).as("n_blocks"),
+          count(col("ex.content")).as("n_content_nonnull"),
+          count(col("ex.error")).as("n_errors"),
+          expr("bit_xor(xxhash64(conv_id, turn_idx, coalesce(ex.content, '')))").as("content_digest"))
+        .withColumn("batch_id", lit(b))
+        .as[LineageRow].collect().sortBy(_.conv_bucket).toSeq
+      val got = spark.read.parquet(TranscriptTable.lineageDir(out, b))
+        .as[LineageRow].collect().sortBy(_.conv_bucket).toSeq
+      assert(got == want, s"_lineage rows of $b")
+      def manifest(k: String) = TranscriptTable.manifestValue(out, b, k)
+      assert(manifest("lineage").contains(
+        want.map(r => s"${r.conv_bucket}:${r.n_turns}:${r.content_digest}").mkString(";")), b)
+      assert(manifest("n_turns").contains(want.map(_.n_turns).sum.toString), b)
+      assert(manifest("schema").contains(written.schema.json), s"schema of $b")
+      want
+    }
+    assert(perBatch.count(_.isEmpty) > 0, "64 batches at sf0.001 must include empty ones")
+    assert(perBatch.flatten.map(_.n_turns).sum == turns.count())
+    assert(perBatch.flatten.map(_.n_errors).sum == 1, "the planted error turn")
+    rmrf(out)
   }
 
   test("set ops: anti-join fixture diff finds no drift") {
