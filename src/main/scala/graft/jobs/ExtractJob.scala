@@ -1,10 +1,8 @@
 package graft.jobs
 
 import graft.pipeline.{Extract, Extracted}
-import graft.table.TranscriptTable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import graft.table.{Lineage, TranscriptTable}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
@@ -24,66 +22,25 @@ final case class ExtractedTurn(
     conv_bucket: Int,
     ex: Extracted)
 
-/** Folds a batch's rows into its per-bucket lineage. An input is one row's
-  * (conv_bucket, ex.nBlocks, content set, error set, content hash); buffer
-  * and output are a flat `Buckets × Slots` long array. Counts add and
-  * digests XOR, so partial buffers merge in any order. */
-private[graft] object LineageAgg
-    extends Aggregator[(Int, Int, Boolean, Boolean, Long), Array[Long], Array[Long]] {
-
-  /** Slots per bucket: n_turns, n_blocks, n_content_nonnull, n_errors,
-    * content_digest (the last XORs, the others add). */
-  val Slots = 5
-
-  def zero: Array[Long] = new Array[Long](ExtractJob.Buckets * Slots)
-
-  def reduce(b: Array[Long], in: (Int, Int, Boolean, Boolean, Long)): Array[Long] = {
-    val o = in._1 * Slots
-    b(o) += 1
-    b(o + 1) += in._2
-    if (in._3) b(o + 2) += 1
-    if (in._4) b(o + 3) += 1
-    b(o + 4) ^= in._5
-    b
-  }
-
-  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) {
-      a(i) = if (i % Slots == Slots - 1) a(i) ^ b(i) else a(i) + b(i)
-      i += 1
-    }
-    a
-  }
-
-  def finish(b: Array[Long]): Array[Long] = b
-  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-}
-
-/** One `_lineage` row: counts and the order-independent xxhash64 XOR digest
-  * over (conv_id, turn_idx, content) of one (batch, conv_bucket). */
-final case class LineageRow(conv_bucket: Int, n_turns: Long, n_blocks: Long,
-    n_content_nonnull: Long, n_errors: Long, content_digest: Long, batch_id: String)
-
 /** The production extraction job (SURVEY.md §3.1 Spark shape):
   *
   *   read turns (column-pruned scan: conv_id, turn_idx, role, text, tool, ts)
-  *   → per-batch conv_bucket filter           (partition-prunable predicate)
+  *   → per-batch conv_bucket filter           (xxhash64 after the scan, not
+  *                                              pruned: every batch reads all input)
   *   → salted repartition                     (shuffle #1, skew-proof map stage)
   *   → mapPartitions Extract.extract          (fused stages 2,4-8; no shuffle)
   *   → repartitionByRange(conv_id, turn_idx)
   *     .sortWithinPartitions                  (shuffle #2, stable turn order)
   *   → observe(per-bucket lineage)            (in the write's result stage)
   *   → TranscriptTable.writeData              (staged, invisible)
-  *   → commitStaged: lineage rows + manifest  (driver-built, atomic commit)
+  *   → commitStaged: manifest with lineage    (driver-built, atomic commit)
   *
   * The extraction map is a pure per-turn function — embarrassingly parallel —
   * which is what makes ≥0.8 N→4N scaling efficiency achievable. Batches are
   * conv_bucket ranges; a killed run resumes by skipping committed manifests. */
 object ExtractJob {
 
-  val Buckets = 64
+  val Buckets = Lineage.Buckets
 
   def bucketCol: Column =
     pmod(xxhash64(col("conv_id")), lit(Buckets)).cast("int")
@@ -107,11 +64,11 @@ object ExtractJob {
   }
 
   /** The per-bucket lineage aggregate over extracted rows, as a flat
-    * `Buckets × LineageAgg.Slots` array. The digest input is Spark's own
+    * `Buckets × Lineage.Slots` array. The digest input is Spark's own
     * `xxhash64(conv_id, turn_idx, coalesce(ex.content, ''))`, so it is
     * cheap at 10^12 rows and needs no sort (FIXTURES.md §3.3). */
   def lineageColumn: Column =
-    udaf(LineageAgg).apply(col("conv_bucket"), coalesce(col("ex.nBlocks"), lit(0)),
+    udaf(Lineage).apply(col("conv_bucket"), coalesce(col("ex.nBlocks"), lit(0)),
       col("ex.content").isNotNull, col("ex.error").isNotNull,
       xxhash64(col("conv_id"), col("turn_idx"), coalesce(col("ex.content"), lit(""))))
       .as("lineage")
@@ -126,7 +83,8 @@ object ExtractJob {
   /** Extract `turns`, range-order them by (conv_id, turn_idx) and stage
     * them as batch `batchId`: the data files are written and the batch
     * stays invisible until [[commitStaged]]. Returns the lineage the write
-    * observed and the schema it wrote.
+    * observed (a flat `Buckets × Lineage.Slots` fold, recorded by
+    * [[commitStaged]] in the manifest) and the schema it wrote.
     *
     * Scale-safe, exactly-once lineage: extraction runs once, streamed
     * straight to parquet (no whole-batch cache, which at 100 TB would
@@ -159,31 +117,24 @@ object ExtractJob {
         val hi = math.min((b + 1) * perBatch, Buckets)
         val slice = withBucket.filter(col("conv_bucket") >= lo && col("conv_bucket") < hi)
         val (lineage, schema) = stage(spark, slice, parts, outTable, batchId)
-        commitStaged(spark, outTable, batchId, lineage, schema)
+        commitStaged(outTable, batchId, lineage, schema)
       }
     }
   }
 
-  /** CAS-commit a STAGED batch with the lineage its write observed: one
-    * `_lineage` row per non-empty bucket, built on the driver and written
-    * as one small local parquet file, and the written schema as a reader
-    * sees it (every field nullable). No byte of the batch is read back.
-    * The tail of the batch loop, shared verbatim with the streaming
-    * foreachBatch path so both ingest modes get the same manifest shape
-    * (lineage summary + n_turns) and resume story. */
-  def commitStaged(spark: SparkSession, outTable: String, batchId: String,
-      lineage: Seq[Long], schema: StructType): Unit = {
-    import spark.implicits._
-    val S = LineageAgg.Slots
-    val rows = (0 until Buckets).filter(b => lineage(b * S) > 0).map { b =>
-      val o = b * S
-      LineageRow(b, lineage(o), lineage(o + 1), lineage(o + 2), lineage(o + 3),
-        lineage(o + 4), batchId)
-    }
-    TranscriptTable.commitWithLineage(rows.toDF().coalesce(1), outTable, batchId,
-      Map("lineage" -> rows.map(r => s"${r.conv_bucket}:${r.n_turns}:${r.content_digest}").mkString(";"),
-          "n_turns" -> rows.map(_.n_turns).sum.toString,
-          "schema" -> TranscriptTable.relaxNullable(schema).json))
+  /** CAS-commit a STAGED batch with the lineage its write observed: the
+    * manifest's `lineage` entry holds every counter of each non-empty
+    * bucket ([[Lineage]]), and its schema is the written one as a reader
+    * sees it (every field nullable). Driver-only: no Spark job, and no byte
+    * of the batch is read back. The tail of the batch loop, shared verbatim
+    * with the streaming foreachBatch path so both ingest modes get the same
+    * manifest shape (lineage + n_turns) and resume story. */
+  def commitStaged(outTable: String, batchId: String, lineage: Seq[Long],
+      schema: StructType): Unit = {
+    TranscriptTable.commit(outTable, batchId, Map(
+      "lineage" -> Lineage.encode(lineage),
+      "n_turns" -> lineage.grouped(Lineage.Slots).map(_.head).sum.toString,
+      "schema" -> TranscriptTable.relaxNullable(schema).json))
   }
 
   def main(args: Array[String]): Unit = {

@@ -161,9 +161,9 @@ object Dedup {
     * jump (comp(v) := min over one hop of comp(comp(v)), i.e. path
     * halving) turns plain hash-min's O(component diameter) rounds into
     * O(log diameter): a pathological 10k-long near-dup chain converges in
-    * ~14 rounds instead of 10k. `maxIter` still hard-bounds the loop. The
-    * per-round changed-count is an aggregate over the already-materialized
-    * checkpoint, not a recompute.
+    * ~14 rounds instead of 10k. `maxIter` hard-bounds the loop, and a loop
+    * that stops there unconverged throws. The per-round changed-count is an
+    * aggregate over the already-materialized checkpoint, not a recompute.
     *
     * Output: (doc_id, cluster_id = min doc_id of its component), one row
     * per doc appearing in >= 1 pair. Oracle: DuckDB recursive-CTE
@@ -232,6 +232,8 @@ object Dedup {
       labels = next.select(col("doc_id"), col("new_cluster").as("cluster_id"))
       it += 1
     }
+    if (changed > 0) throw new IllegalStateException(
+      s"duplicateClusters: not converged at maxIter = $maxIter ($changed labels changed in the last round)")
     labels
   }
 

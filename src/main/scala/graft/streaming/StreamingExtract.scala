@@ -20,7 +20,7 @@ object StreamingExtract {
     * turn_idx, role, text, tool, ts). Each micro-batch runs the SAME
     * stage-then-commit flow as the batch job ([[ExtractJob.run]]): salted
     * extraction → range-ordered staged write that observes the batch's
-    * lineage → CAS manifest commit carrying the lineage summary + n_turns
+    * lineage → CAS manifest commit carrying the lineage + n_turns
     * (no re-scan of the written files). Streaming
     * ingest therefore gets the identical exactly-once + resume story:
     * Spark's checkpoint replays a batch id after a crash, `isCommitted`
@@ -40,7 +40,7 @@ object StreamingExtract {
           val (lineage, schema) = ExtractJob.stage(spark, batch,
             spark.sparkContext.defaultParallelism, outTable, bid)
           crashHook(batchId)
-          ExtractJob.commitStaged(spark, outTable, bid, lineage, schema)
+          ExtractJob.commitStaged(outTable, bid, lineage, schema)
         }
       }
       .trigger(Trigger.AvailableNow())

@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   *
   *   table/
   *     data/batch=<id>/...parquet      -- data files for one batch
-  *     _manifests/manifest-<id>.json   -- atomic commit marker (tmp+rename)
+  *     _manifests/manifest-<id>.json   -- atomic commit marker (tmp+rename);
+  *                                        also the batch's schema, row count
+  *                                        and lineage ([[Lineage]])
   *
   * A batch is visible iff its manifest exists; a crashed batch leaves only
   * orphan data files that a re-run overwrites. Re-running a committed batch
@@ -140,19 +142,14 @@ object TranscriptTable {
     new String(Files.readAllBytes(
       manifestDir(table).resolve(s"manifest-$b.json")), UTF_8)
 
-  private val ReplacesRe =
-    java.util.regex.Pattern.compile("\"replaces\": \"([^\"]*)\"")
-
   /** Batch ids retired by compaction manifests (optionally only manifests
     * up to `upTo`, for time travel). Driver-side manifest reads only. */
   def replacedBatches(table: String, upTo: String = null): Set[String] =
     committedBatches(table)
       .filter(b => upTo == null || b <= upTo)
-      .flatMap { b =>
-        val m = ReplacesRe.matcher(manifestJson(table, b))
-        if (m.find()) m.group(1).split(',').toSeq.filter(_.nonEmpty)
-        else Seq.empty
-      }.toSet
+      .flatMap(b => manifestValue(table, b, "replaces")
+        .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil))
+      .toSet
 
   /** The batches a snapshot reader should scan: committed minus retired.
     * With `asOf`, retirement by LATER compactions is ignored, so a
@@ -481,21 +478,14 @@ object TranscriptTable {
     }
     layout(df).write.mode(SaveMode.Overwrite)
       .parquet(dataDir(table, newBatchId))
-    val withLineage = batchIds.filter(b => Files.exists(Paths.get(lineageDir(table, b))))
-    if (withLineage.nonEmpty)
-      spark.read.parquet(withLineage.map(b => lineageDir(table, b)): _*)
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(lineageDir(table, newBatchId))
-    // carry the replaced row counts so manifest-only monitoring stays exact
-    val nTurns = batchIds.map { b =>
-      val m = java.util.regex.Pattern.compile("\"n_turns\": \"(\\d+)\"")
-        .matcher(manifestJson(table, b))
-      if (m.find()) m.group(1).toLong else 0L
-    }.sum
+    // carry the replaced row counts and lineage so manifest-only monitoring
+    // stays exact: the rows are the same, so their lineage merges
+    val lineage = batchIds.flatMap(manifestValue(table, _, "lineage"))
     commit(table, newBatchId, Map(
       "replaces" -> batchIds.sorted.mkString(","),
-      "n_turns" -> nTurns.toString,
+      "n_turns" -> batchIds.map(nTurns(table, _)).sum.toString,
       "schema" -> df.schema.json) ++
+      (if (lineage.isEmpty) Map.empty else Map("lineage" -> Lineage.mergeEntries(lineage))) ++
       statsExtras(spark, table, newBatchId,
         (statsCols ++ inheritedStatsCols(table, batchIds)).distinct))
   }
@@ -724,12 +714,13 @@ object TranscriptTable {
     * batch was written with, and after a purge/redaction those rows are
     * gone or changed; carrying it forward would keep purged-row digests
     * alive past [[vacuum]] (the GDPR hole) and desync lineage totals from
-    * manifest `n_turns`. Row-preserving compaction keeps its verbatim
-    * carry in [[compactWith]]. Re-checks the touched batches are STILL
-    * live right before the flip: a concurrent compaction of one of them
-    * would otherwise leave both the compacted copy and these survivors
-    * live (double reads). The check narrows the race to the write-commit
-    * gap — table maintenance assumes a single writer, as in compactWith. */
+    * manifest `n_turns`. Row-preserving compaction merges the replaced
+    * batches' lineage in [[compactWith]]. Re-checks the touched batches
+    * are STILL live right before the flip: a concurrent compaction of one
+    * of them would otherwise leave both the compacted copy and these
+    * survivors live (double reads). The check narrows the race to the
+    * write-commit gap — table maintenance assumes a single writer, as in
+    * compactWith. */
   private def commitRewrite(spark: SparkSession, table: String,
       touched: Seq[String], newBatchId: String, out: DataFrame,
       statsCols: Seq[String]): Long = {
@@ -748,51 +739,28 @@ object TranscriptTable {
     rowsAfter
   }
 
-  /** Reclaim the data/lineage files of compaction-retired batches. After
-    * this, time travel to pre-compaction snapshots is gone (their manifests
+  /** Reclaim the data files of compaction-retired batches. After this,
+    * time travel to pre-compaction snapshots is gone (their manifests
     * remain for resume idempotence) — same contract as Iceberg's
     * expire_snapshots + remove_orphan_files. */
   def vacuum(table: String): Unit =
-    replacedBatches(table).foreach { b =>
-      graft.util.Fs.rmrf(Paths.get(dataDir(table, b)))
-      graft.util.Fs.rmrf(Paths.get(lineageDir(table, b)))
-    }
+    replacedBatches(table).foreach(b => graft.util.Fs.rmrf(Paths.get(dataDir(table, b))))
 
-  def lineageDir(table: String, batchId: String): String =
-    s"$table/_lineage/batch=$batchId"
-
-  /** Lineage rows of all live batches (written by writeBatchWithLineage;
-    * compaction carries replaced batches' lineage into the new batch). */
+  /** Lineage rows of all live batches, from their manifests alone (no data
+    * read). A compaction batch carries the merge of the batches it
+    * replaced; row-changing rewrites carry none. */
   def readLineage(spark: SparkSession, table: String): DataFrame = {
-    val batches = liveBatches(table)
-      .filter(b => Files.exists(Paths.get(lineageDir(table, b))))
-    require(batches.nonEmpty, s"no lineage in $table")
-    spark.read.parquet(batches.map(b => lineageDir(table, b)): _*)
+    val entries = liveBatches(table).flatMap(b => manifestValue(table, b, "lineage").map(b -> _))
+    require(entries.nonEmpty, s"no lineage in $table")
+    spark.createDataFrame(entries.flatMap { case (b, e) => Lineage.rows(b, e) })
   }
 
-  /** Write data + lineage rows, then commit both under one manifest. */
-  def writeBatchWithLineage(df: DataFrame, lineage: DataFrame, table: String,
-      batchId: String, manifestExtra: Map[String, String] = Map.empty): Unit = {
-    if (isCommitted(table, batchId)) return
-    writeData(df, table, batchId)
-    commitWithLineage(lineage, table, batchId, manifestExtra)
-  }
-
-  /** Write lineage rows for a staged batch, then commit it. */
-  def commitWithLineage(lineage: DataFrame, table: String, batchId: String,
-      manifestExtra: Map[String, String] = Map.empty): Unit = {
-    if (isCommitted(table, batchId)) return
-    lineage.write.mode(SaveMode.Overwrite).parquet(lineageDir(table, batchId))
-    commit(table, batchId, manifestExtra)
-  }
+  private def nTurns(table: String, batchId: String): Long =
+    manifestValue(table, batchId, "n_turns").fold(0L)(_.toLong)
 
   /** Row count from manifests alone — no data scan (monitoring at scale).
     * Counts LIVE batches only: a compaction manifest carries the sum of its
     * replaced batches, so the total is stable across maintenance. */
   def committedRowCount(table: String): Long =
-    liveBatches(table).map { b =>
-      val m = java.util.regex.Pattern.compile("\"n_turns\": \"(\\d+)\"")
-        .matcher(manifestJson(table, b))
-      if (m.find()) m.group(1).toLong else 0L
-    }.sum
+    liveBatches(table).map(nTurns(table, _)).sum
 }

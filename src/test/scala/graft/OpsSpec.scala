@@ -159,9 +159,18 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val base = sentence(51, 76).split(" ")
     val docs = docsDf((0 until 10).map(i =>
       ((i + 1).toLong, base.slice(4 * i, 4 * i + 40).mkString(" "))))
-    val clusters = Dedup.duplicateClusters(docs, threshold = 0.7, maxIter = 6)
+    // maxDriverPairs = 0 forces the label-propagation loop: this chain's
+    // pair count is under the driver union-find cap
+    val clusters = Dedup.duplicateClusters(docs, threshold = 0.7, maxIter = 6,
+        maxDriverPairs = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(clusters == (1L to 10L).map(_ -> 1L).toMap, s"got $clusters")
+    // a loop cut short by maxIter reports it instead of returning
+    // unconverged labels
+    val e = intercept[IllegalStateException] {
+      Dedup.duplicateClusters(docs, threshold = 0.7, maxIter = 2, maxDriverPairs = 0L)
+    }
+    assert(e.getMessage.contains("maxIter = 2"), e.getMessage)
   }
 
   test("duplicate clusters: driver union-find fast path equals the iterative loop") {

@@ -1,8 +1,8 @@
 package graft
 
-import graft.jobs.{ExtractJob, LineageAgg, LineageRow, Synth}
+import graft.jobs.{ExtractJob, Synth}
 import graft.pipeline.Extract
-import graft.table.TranscriptTable
+import graft.table.{Lineage, LineageRow, TranscriptTable}
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -96,7 +96,8 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
       TranscriptTable.manifestDir(out).resolve("manifest-b000.json")), "UTF-8")
     assert(manifest.contains("\"lineage\"") && manifest.contains("\"n_turns\""))
 
-    // lineage rows table: per (batch, conv_bucket) counts sum to the total
+    // lineage rows from the manifests: per (batch, conv_bucket) counts sum
+    // to the total
     val lin = TranscriptTable.readLineage(spark, out)
     assert(lin.columns.toSet == Set("conv_bucket", "n_turns", "n_blocks",
       "n_content_nonnull", "n_errors", "content_digest", "batch_id"))
@@ -345,9 +346,13 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
         .listFiles().count(_.getName.endsWith(".parquet"))
     }.sum
     val files1 = dataFiles()
+    val sp = spark; import sp.implicits._
+    val replaced = Set("b000", "b001", "b002")
+    val linBefore = TranscriptTable.readLineage(spark, out).as[LineageRow]
+      .collect().filter(r => replaced(r.batch_id))
 
     // compact the first three batches into one file
-    TranscriptTable.compact(spark, out, Seq("b000", "b001", "b002"), "c000")
+    TranscriptTable.compact(spark, out, replaced.toSeq.sorted, "c000")
     assert(TranscriptTable.liveBatches(out) == Seq("b003", "c000"))
     assert(TranscriptTable.committedBatches(out).length == 5) // manifests stay
     assert(TranscriptTable.read(spark, out).count() == n1)
@@ -358,6 +363,22 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     // lineage still sums to the total through the carried batch
     assert(TranscriptTable.readLineage(spark, out)
       .agg(sum("n_turns")).head.getLong(0) == n1)
+    // the compaction manifest's lineage is the per-bucket merge of the
+    // replaced batches' lineage: counts add, digests XOR
+    val merged = linBefore.groupBy(_.conv_bucket).toSeq.map { case (b, rs) =>
+      LineageRow(b, rs.map(_.n_turns).sum, rs.map(_.n_blocks).sum,
+        rs.map(_.n_content_nonnull).sum, rs.map(_.n_errors).sum,
+        rs.map(_.content_digest).reduce(_ ^ _), "c000")
+    }.sortBy(_.conv_bucket)
+    assert(TranscriptTable.readLineage(spark, out).as[LineageRow].collect()
+      .filter(_.batch_id == "c000").sortBy(_.conv_bucket).toSeq == merged)
+    // the live manifests' digests (field 2) still cover every row
+    val manifestDigest = TranscriptTable.liveBatches(out)
+      .flatMap(TranscriptTable.manifestValue(out, _, "lineage"))
+      .flatMap(_.split(';').filter(_.nonEmpty).map(_.split(':')(2).toLong))
+      .foldLeft(0L)(_ ^ _)
+    assert(manifestDigest == d1, "live manifest lineage digest")
+    assert(!Files.exists(Paths.get(out, "_lineage")), "lineage lives in the manifests")
 
     // resume stays idempotent: replaced ids still read as committed, so a
     // re-run of the producer does not resurrect their data
@@ -563,7 +584,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
             lit(null).cast("string").as("error")).as("ex"))
       val obs = Observation()
       batch.observe(obs, ExtractJob.lineageColumn).write.format("noop").mode("overwrite").save()
-      ExtractJob.observedLineage(obs).grouped(LineageAgg.Slots).toSeq
+      ExtractJob.observedLineage(obs).grouped(Lineage.Slots).toSeq
     }
     val l1 = lineageAt(1)
     assert(l1 == lineageAt(8), "digest must be partitioning-independent")
@@ -574,11 +595,25 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(l1.exists(_(4) != 0L))
   }
 
+  test("manifest lineage entries merge bucket by bucket") {
+    // field order: bucket, n_turns, content_digest, n_blocks,
+    // n_content_nonnull, n_errors; a bucket present in both entries adds
+    // its counts and XORs its digest, the others pass through
+    val a = "3:10:5:20:9:1;7:2:6:4:2:0"
+    val b = "3:1:12:2:1:0;9:4:-1:8:4:1"
+    assert(Lineage.mergeEntries(Seq(a, b)) == "3:11:9:22:10:1;7:2:6:4:2:0;9:4:-1:8:4:1")
+    assert(Lineage.encode(Lineage.decode(b)) == b)
+    assert(Lineage.rows("x", a) == Seq(LineageRow(3, 10, 20, 9, 1, 5, "x"),
+      LineageRow(7, 2, 4, 2, 0, 6, "x")))
+    assert(Lineage.encode(Lineage.decode("")) == "" && Lineage.mergeEntries(Seq("", "")) == "")
+  }
+
   test("observed lineage equals a rescan of the written batches") {
     // the lineage each write job observes must be what a rescan of its
-    // files computes with the SQL aggregate: same _lineage rows, manifest
-    // lineage string, n_turns and schema. 64 batches at sf0.001 leave many
-    // empty; a planted empty page fails blockify and must count as an error.
+    // files computes with the SQL aggregate: same readLineage rows,
+    // manifest lineage entry, n_turns and schema. 64 batches at sf0.001
+    // leave many empty; a planted empty page fails blockify and must count
+    // as an error.
     val out = "/tmp/graft_observed_lineage"
     rmrf(out)
     val sp = spark; import sp.implicits._
@@ -591,6 +626,8 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
       ExecutionContext.global), 5.minutes)
     val batches = TranscriptTable.committedBatches(out)
     assert(batches.length == 64)
+    val lineage = TranscriptTable.readLineage(spark, out).as[LineageRow]
+      .collect().groupBy(_.batch_id)
     val perBatch = batches.map { b =>
       val written = spark.read.parquet(TranscriptTable.dataDir(out, b))
       val want = written.groupBy(col("conv_bucket"))
@@ -602,12 +639,12 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
           expr("bit_xor(xxhash64(conv_id, turn_idx, coalesce(ex.content, '')))").as("content_digest"))
         .withColumn("batch_id", lit(b))
         .as[LineageRow].collect().sortBy(_.conv_bucket).toSeq
-      val got = spark.read.parquet(TranscriptTable.lineageDir(out, b))
-        .as[LineageRow].collect().sortBy(_.conv_bucket).toSeq
-      assert(got == want, s"_lineage rows of $b")
+      val got = lineage.getOrElse(b, Array.empty[LineageRow]).sortBy(_.conv_bucket).toSeq
+      assert(got == want, s"readLineage rows of $b")
       def manifest(k: String) = TranscriptTable.manifestValue(out, b, k)
-      assert(manifest("lineage").contains(
-        want.map(r => s"${r.conv_bucket}:${r.n_turns}:${r.content_digest}").mkString(";")), b)
+      assert(manifest("lineage").contains(want.map(r =>
+        s"${r.conv_bucket}:${r.n_turns}:${r.content_digest}:${r.n_blocks}:" +
+          s"${r.n_content_nonnull}:${r.n_errors}").mkString(";")), b)
       assert(manifest("n_turns").contains(want.map(_.n_turns).sum.toString), b)
       assert(manifest("schema").contains(written.schema.json), s"schema of $b")
       want

@@ -404,10 +404,10 @@ class TableStatsSpec extends AnyFunSuite with SparkSuite {
     val sp = spark; import sp.implicits._
     val out = freshTable("graft_cow_lineage")
     val b0 = (0L until 50L).map(i => (i, s"d$i")).toDF("id", "text").coalesce(1)
-    val lin = Seq(("b000", 50L)).toDF("bucket", "n")
-    TT.writeBatchWithLineage(b0, lin, out, "b000")
-    // writeBatchWithLineage records no stats -> the delete blind-keeps
-    // and rewrites the batch; its stale lineage must NOT carry over
+    TT.writeBatch(b0, out, "b000", manifestExtra = Map("lineage" -> "0:50:7:50:50:0"))
+    assert(TT.readLineage(spark, out).count() == 1)
+    // the batch records no stats -> the delete blind-keeps and rewrites
+    // the batch; its stale lineage must NOT carry over
     TT.deleteRange(spark, out, "id", 0L, 9L, "d001")
     assert(TT.read(spark, out).count() == 40L)
     intercept[IllegalArgumentException] {
