@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.pipeline.{Extract, Extracted}
 import graft.table.{Lineage, TranscriptTable}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
@@ -22,23 +22,41 @@ final case class ExtractedTurn(
     conv_bucket: Int,
     ex: Extracted)
 
-/** The production extraction job (SURVEY.md §3.1 Spark shape):
+/** The production extraction job (SURVEY.md §3.1 Spark shape). One run is
+  * one Spark query over every pending (uncommitted) batch:
   *
   *   read turns (column-pruned scan: conv_id, turn_idx, role, text, tool, ts)
-  *   → per-batch conv_bucket filter           (xxhash64 after the scan, not
-  *                                              pruned: every batch reads all input)
+  *   → conv_bucket filter to the pending      (xxhash64 after the scan: the
+  *     batches' ranges                         input is read once per run)
   *   → salted repartition                     (shuffle #1, skew-proof map stage)
   *   → mapPartitions Extract.extract          (fused stages 2,4-8; no shuffle)
-  *   → repartitionByRange(conv_id, turn_idx)
-  *     .sortWithinPartitions                  (shuffle #2, stable turn order)
+  *   → batch column from conv_bucket
+  *   → repartition(conv_id)
+  *     .sortWithinPartitions(batch, conv_id,  (shuffle #2: each conversation
+  *                           turn_idx)         whole and turn-ordered in one file)
   *   → observe(per-bucket lineage)            (in the write's result stage)
-  *   → TranscriptTable.writeData              (staged, invisible)
-  *   → commitStaged: manifest with lineage    (driver-built, atomic commit)
+  *   → TranscriptTable.writeData              (partitionBy(batch), dynamic
+  *                                              overwrite: staged, invisible)
+  *   → commitStaged per batch: manifest with  (driver-built, atomic commit)
+  *     its bucket slice of the lineage
   *
   * The extraction map is a pure per-turn function — embarrassingly parallel —
   * which is what makes ≥0.8 N→4N scaling efficiency achievable. Batches are
-  * conv_bucket ranges; a killed run resumes by skipping committed manifests. */
+  * conv_bucket ranges and stay the commit unit; a killed run resumes by
+  * skipping committed manifests. The failure unit is the run: a failure
+  * before the commits leaves every pending batch uncommitted, and the
+  * rerun extracts them all again. */
 object ExtractJob {
+
+  /** A resumable batch: its id and the conv_bucket range [lo, hi) it owns. */
+  final case class Batch(id: String, lo: Int, hi: Int) {
+    def buckets: Range = lo until hi
+
+    /** This batch's slice of a run's observed lineage: the buckets it owns
+      * keep their counters, every other bucket reads zero. */
+    def lineageOf(lineage: Seq[Long]): Seq[Long] =
+      lineage.zipWithIndex.map { case (v, i) => if (buckets.contains(i / Lineage.Slots)) v else 0L }
+  }
 
   val Buckets = Lineage.Buckets
 
@@ -80,45 +98,66 @@ object ExtractJob {
   def observedLineage(obs: Observation): Seq[Long] =
     Await.result(obs.future, 10.minutes).getAs[Seq[Long]]("lineage")
 
-  /** Extract `turns`, range-order them by (conv_id, turn_idx) and stage
-    * them as batch `batchId`: the data files are written and the batch
-    * stays invisible until [[commitStaged]]. Returns the lineage the write
-    * observed (a flat `Buckets × Lineage.Slots` fold, recorded by
-    * [[commitStaged]] in the manifest) and the schema it wrote.
+  /** Extract `turns` and stage them as `batches` in one write: each row
+    * lands in the data directory of the batch owning its conv_bucket, and
+    * every batch stays invisible until [[commitStaged]]. Returns the
+    * lineage the write observed (a flat `Buckets × Lineage.Slots` fold over
+    * all of `batches`; [[Batch.lineageOf]] slices it per batch) and the
+    * schema it wrote.
+    *
+    * Layout: hash-partitioned by conv_id and sorted by (batch, conv_id,
+    * turn_idx) within a partition, so each conversation is whole and
+    * turn-ordered in one file. A range exchange would run a sampling job
+    * that recomputes the extraction map; the hash exchange does not. The
+    * trade-off: one giant conversation skews one write task, while the
+    * extraction map stays salted.
     *
     * Scale-safe, exactly-once lineage: extraction runs once, streamed
-    * straight to parquet (no whole-batch cache, which at 100 TB would
-    * double I/O), and the lineage is folded by the write job itself. The
-    * aggregate sits after the sort, so it runs in the write's result stage,
-    * and Spark applies a result task's accumulator updates once per
-    * partition: a retried or speculative task cannot count a row twice. */
+    * straight to parquet (no cache, which at 100 TB would double I/O), and
+    * the lineage is folded by the write job itself. The aggregate sits
+    * after the sort, so it runs in the write's result stage, and Spark
+    * applies a result task's accumulator updates once per partition: a
+    * retried or speculative task cannot count a row twice.
+    *
+    * The write overwrites only the directories of batches that get rows
+    * (dynamic partition overwrite), so a staged-but-uncommitted directory
+    * of a killed run is replaced and a committed one is never touched. A
+    * batch with no rows gets one empty file that carries the schema. */
   def stage(spark: SparkSession, turns: DataFrame, parts: Int, outTable: String,
-      batchId: String): (Seq[Long], StructType) = {
-    val ordered = extractTurns(spark, turns, parts).toDF()
-      .repartitionByRange(math.max(1, parts / 4), col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions("conv_id", "turn_idx")
+      batches: Seq[Batch]): (Seq[Long], StructType) = {
+    val owned = turns.withColumn("conv_bucket", bucketCol)
+      .filter(col("conv_bucket").isin(batches.flatMap(_.buckets): _*))
+    val extracted = extractTurns(spark, owned, parts).toDF()
+    def owns(b: Batch) = col("conv_bucket").between(b.lo, b.hi - 1)
+    val batch = batches.tail.foldLeft(when(owns(batches.head), batches.head.id))(
+      (c, b) => c.when(owns(b), b.id))
+    val ordered = extracted.withColumn("batch", batch)
+      .repartition(parts, col("conv_id"))
+      .sortWithinPartitions("batch", "conv_id", "turn_idx")
     val obs = Observation()
-    TranscriptTable.writeData(ordered.observe(obs, lineageColumn), outTable, batchId)
-    (observedLineage(obs), ordered.schema)
+    TranscriptTable.writeData(ordered.observe(obs, lineageColumn), outTable)
+    val lineage = observedLineage(obs)
+    batches.filter(_.buckets.forall(k => lineage(k * Lineage.Slots) == 0L))
+      .foreach(b => TranscriptTable.writeData(
+        spark.createDataFrame(java.util.List.of[Row](), extracted.schema), outTable, b.id))
+    (lineage, extracted.schema)
   }
 
-  /** Run extraction over a turns DataFrame into an Iceberg-like table,
-    * in `nBatches` resumable bucket-range batches. */
+  /** Run extraction over a turns DataFrame into an Iceberg-like table, in
+    * `nBatches` resumable bucket-range batches: one query stages every
+    * pending batch, then each is committed with its slice of the lineage,
+    * in id order. A fully committed table starts no Spark job. */
   def run(spark: SparkSession, turns: DataFrame, outTable: String,
       nBatches: Int = 4, saltPartitions: Int = 0): Unit = {
     val parts = if (saltPartitions > 0) saltPartitions
       else spark.sparkContext.defaultParallelism
-    val withBucket = turns.withColumn("conv_bucket", bucketCol)
     val perBatch = (Buckets + nBatches - 1) / nBatches
-    (0 until nBatches).foreach { b =>
-      val batchId = f"b$b%03d"
-      if (!TranscriptTable.isCommitted(outTable, batchId)) {
-        val lo = b * perBatch
-        val hi = math.min((b + 1) * perBatch, Buckets)
-        val slice = withBucket.filter(col("conv_bucket") >= lo && col("conv_bucket") < hi)
-        val (lineage, schema) = stage(spark, slice, parts, outTable, batchId)
-        commitStaged(outTable, batchId, lineage, schema)
-      }
+    val pending = (0 until nBatches)
+      .map(b => Batch(f"b$b%03d", b * perBatch, math.min((b + 1) * perBatch, Buckets)))
+      .filterNot(b => TranscriptTable.isCommitted(outTable, b.id))
+    if (pending.nonEmpty) {
+      val (lineage, schema) = stage(spark, turns, parts, outTable, pending)
+      pending.foreach(b => commitStaged(outTable, b.id, b.lineageOf(lineage), schema))
     }
   }
 
@@ -126,8 +165,8 @@ object ExtractJob {
     * manifest's `lineage` entry holds every counter of each non-empty
     * bucket ([[Lineage]]), and its schema is the written one as a reader
     * sees it (every field nullable). Driver-only: no Spark job, and no byte
-    * of the batch is read back. The tail of the batch loop, shared verbatim
-    * with the streaming foreachBatch path so both ingest modes get the same
+    * of the batch is read back. The tail of [[run]], shared verbatim with
+    * the streaming foreachBatch path so both ingest modes get the same
     * manifest shape (lineage + n_turns) and resume story. */
   def commitStaged(outTable: String, batchId: String, lineage: Seq[Long],
       schema: StructType): Unit = {
@@ -140,7 +179,8 @@ object ExtractJob {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.map(_.toDouble).getOrElse(0.01)
     val outTable = if (args.length > 1) args(1) else "/tmp/graft_extracted"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.Bench.session(cpus)
     val turns = Synth.turns(spark, sf, cpus.toInt * 2)
     // a resume skips committed batches: rate only the turns this run commits

@@ -18,15 +18,16 @@ object StreamingExtract {
 
   /** Start extraction over a streaming turns DataFrame (schema: conv_id,
     * turn_idx, role, text, tool, ts). Each micro-batch runs the SAME
-    * stage-then-commit flow as the batch job ([[ExtractJob.run]]): salted
-    * extraction → range-ordered staged write that observes the batch's
-    * lineage → CAS manifest commit carrying the lineage + n_turns
-    * (no re-scan of the written files). Streaming
-    * ingest therefore gets the identical exactly-once + resume story:
-    * Spark's checkpoint replays a batch id after a crash, `isCommitted`
-    * no-ops committed replays, and a batch killed in the staged-but-
-    * uncommitted window is invisible until the replay overwrites and
-    * commits it (pinned by the kill/restart StreamingSpec test).
+    * stage-then-commit flow as the batch job ([[ExtractJob.run]]), as one
+    * batch that owns all `ExtractJob.Buckets` buckets: salted extraction →
+    * conv_id-hashed, turn-ordered staged write that observes the batch's
+    * lineage → CAS manifest commit carrying the lineage + n_turns (no
+    * re-scan of the written files). Streaming ingest therefore gets the
+    * identical exactly-once + resume story: Spark's checkpoint replays a
+    * batch id after a crash, `isCommitted` no-ops committed replays, and a
+    * batch killed in the staged-but-uncommitted window is invisible until
+    * the replay overwrites and commits it (pinned by the kill/restart
+    * StreamingSpec test). A micro-batch is its own failure unit.
     *
     * `crashHook` is a test-only failpoint invoked between stage and
     * commit — production callers leave the default no-op. */
@@ -38,7 +39,8 @@ object StreamingExtract {
         val bid = f"s$batchId%06d"
         if (!TranscriptTable.isCommitted(outTable, bid)) {
           val (lineage, schema) = ExtractJob.stage(spark, batch,
-            spark.sparkContext.defaultParallelism, outTable, bid)
+            spark.sparkContext.defaultParallelism, outTable,
+            Seq(ExtractJob.Batch(bid, 0, ExtractJob.Buckets)))
           crashHook(batchId)
           ExtractJob.commitStaged(outTable, bid, lineage, schema)
         }

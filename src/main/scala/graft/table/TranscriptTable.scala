@@ -87,6 +87,15 @@ object TranscriptTable {
   def writeData(df: DataFrame, table: String, batchId: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(dataDir(table, batchId))
 
+  /** Stage several batches in one write: `df`'s `batch` column names the
+    * batch of each row, and its other columns land in that batch's
+    * [[dataDir]]. Dynamic partition overwrite replaces only the directories
+    * of batches that get rows, so other batches' data, committed or not, is
+    * never touched. */
+  def writeData(df: DataFrame, table: String): Unit =
+    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch").parquet(s"$table/data")
+
   /** Atomically publish a staged batch (manifest tmp+rename). A batch that
     * records a schema is validated against the table's current union BEFORE
     * the manifest flips — every commit path (writeBatch, commitStaged,

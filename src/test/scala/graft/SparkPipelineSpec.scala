@@ -3,10 +3,14 @@ package graft
 import graft.jobs.{ExtractJob, Synth}
 import graft.pipeline.Extract
 import graft.table.{Lineage, LineageRow, TranscriptTable}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
@@ -108,6 +112,81 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(TranscriptTable.committedRowCount(out) == n1)
     val asOf = TranscriptTable.readAsOf(spark, out, "b001").count()
     assert(asOf > 0 && asOf < n1)
+    rmrf(out)
+  }
+
+  /** What a listener saw while `body` ran: Spark jobs started, records
+    * read by scans, and the SQL executions whose tasks wrote output bytes. */
+  private final class RunProbe extends SparkListener {
+    val jobs = new AtomicInteger
+    val recordsRead = new AtomicLong
+    private val execOfStage = new ConcurrentHashMap[Int, Long]
+    val writingExecs: java.util.Set[Long] = ConcurrentHashMap.newKeySet[Long]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      val exec = Option(j.properties).flatMap(p =>
+        Option(p.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong)
+      j.stageIds.foreach(execOfStage.put(_, exec))
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null) {
+        recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
+        if (t.taskMetrics.outputMetrics.bytesWritten > 0)
+          writingExecs.add(execOfStage.getOrDefault(t.stageId, -1L))
+      }
+  }
+
+  private def probed(body: => Unit): RunProbe = {
+    val probe = new RunProbe
+    spark.sparkContext.addSparkListener(probe)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(probe)
+    probe
+  }
+
+  test("one run reads its input once and writes every pending batch in one query") {
+    val src = "/tmp/graft_one_pass_src"
+    val out = "/tmp/graft_one_pass_table"
+    Seq(src, out).foreach(rmrf)
+    Synth.turns(spark, 0.001, 4).write.parquet(src)
+    val turns = spark.read.parquet(src)
+    val n = turns.count()
+    val first = probed(ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8))
+    assert(TranscriptTable.committedBatches(out) == Seq("b000", "b001", "b002", "b003"))
+    assert(TranscriptTable.committedRowCount(out) == n)
+    assert(first.recordsRead.get == n, "the scans of one run read each input row once")
+    assert(first.writingExecs.size == 1,
+      s"one SQL execution writes every batch: ${first.writingExecs}")
+    val rerun = probed(ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8))
+    assert(rerun.jobs.get == 0, "a fully committed table starts no Spark job")
+    Seq(src, out).foreach(rmrf)
+  }
+
+  test("resume rewrites only the pending batches' directories") {
+    val out = "/tmp/graft_resume_partitions"
+    rmrf(out)
+    val turns = Synth.turns(spark, 0.001, 4)
+    ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8)
+    def digest() = TranscriptTable.read(spark, out)
+      .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, coalesce(ex.content,'')))")).head.getLong(0)
+    def listing(b: String): Map[String, Long] =
+      Option(new java.io.File(TranscriptTable.dataDir(out, b)).listFiles())
+        .fold(Map.empty[String, Long])(_.map(f => f.getName -> f.lastModified).toMap)
+    val d1 = digest()
+    val kept = Seq("b000", "b002").map(listing)
+    Seq("b001", "b003").foreach(b =>
+      Files.delete(TranscriptTable.manifestDir(out).resolve(s"manifest-$b.json")))
+    val orphan = Paths.get(TranscriptTable.dataDir(out, "b003"), "part-orphan.parquet")
+    Files.write(orphan, "left by a killed run".getBytes("UTF-8"))
+
+    ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8)
+    assert(Seq("b000", "b002").map(listing) == kept, "committed batches are never rewritten")
+    assert(!Files.exists(orphan), "a pending batch's directory is replaced")
+    TranscriptTable.committedBatches(out).foreach { b =>
+      assert(TranscriptTable.batchFiles(out, b) ==
+        listing(b).keys.filter(_.endsWith(".parquet")).toSeq.sorted, s"files of $b")
+    }
+    assert(digest() == d1, "resume must reproduce identical content")
     rmrf(out)
   }
 
