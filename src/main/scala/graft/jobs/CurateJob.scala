@@ -109,7 +109,7 @@ object CurateJob {
     * is what [[graft.ops.Dedup.nearDedupAgainst]] bounds: banded LSH with
     * a corpus-side hot cap, and `corpusSigs` (the persisted signature
     * store) removes the per-batch corpus signature pass entirely — the
-    * measured 2.8x of the long-doc ScaleProbe. The filters run FIRST, so
+    * measured 2.8x of the long-doc scale probe (BENCH.md). The filters run FIRST, so
     * the cross-corpus dedup sees only the already-curated sliver.
     * `bloomDir` (a FRESH [[graft.ops.BloomDedup]] filter — callers gate
     * on [[graft.ops.BloomDedup.bloomFresh]]) replaces the exact-pass

@@ -163,18 +163,17 @@ object ExtractJob {
 
   /** CAS-commit a STAGED batch with the lineage its write observed: the
     * manifest's `lineage` entry holds every counter of each non-empty
-    * bucket ([[Lineage]]), and its schema is the written one as a reader
-    * sees it (every field nullable). Driver-only: no Spark job, and no byte
-    * of the batch is read back. The tail of [[run]], shared verbatim with
-    * the streaming foreachBatch path so both ingest modes get the same
-    * manifest shape (lineage + n_turns) and resume story. */
+    * bucket ([[Lineage]]), and [[TranscriptTable.commit]] records the
+    * written schema in its reader-side (relaxed) form. Driver-only: no
+    * Spark job, and no byte of the batch is read back. The tail of [[run]],
+    * shared verbatim with the streaming foreachBatch path so both ingest
+    * modes get the same manifest shape (lineage + n_turns) and resume
+    * story. */
   def commitStaged(outTable: String, batchId: String, lineage: Seq[Long],
-      schema: StructType): Unit = {
-    TranscriptTable.commit(outTable, batchId, Map(
+      schema: StructType): Unit =
+    TranscriptTable.commit(outTable, batchId, schema, Map(
       "lineage" -> Lineage.encode(lineage),
-      "n_turns" -> lineage.grouped(Lineage.Slots).map(_.head).sum.toString,
-      "schema" -> TranscriptTable.relaxNullable(schema).json))
-  }
+      "n_turns" -> lineage.grouped(Lineage.Slots).map(_.head).sum.toString))
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.map(_.toDouble).getOrElse(0.01)

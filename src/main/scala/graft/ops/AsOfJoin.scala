@@ -138,7 +138,7 @@ object AsOfJoin {
     * hashing the key keeps or drops every row of a key together, turning
     * the probe into a sample of KEYS — it would miss the hot key 99% of
     * the time and report a meaningless share for whichever key survived
-    * (caught by ScaleProbe: share=1.0 from a single sampled tail key).
+    * (caught by a scale probe, BENCH.md: share=1.0 from a single sampled tail key).
     *
     * The row bound is a PER-PARTITION cap (`maxSampleRows / nPartitions`),
     * not a global `limit`: `limit` satisfies itself from the first

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the shared fp64 kernel (same accumulation order as Similarity.cosine,
   * bit-parity pinned in OpsSpec). The UDF form boxes every element into a
   * Seq[Float] per row; in a 10^8-candidate LSH verify loop that boxing IS
-  * the bottleneck (GC livelock observed at 1M vectors in ScaleProbe). */
+  * the bottleneck (GC livelock observed at 1M vectors, BENCH.md round 4). */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -395,7 +395,7 @@ object Similarity {
 
   /** Recall-controlled embedding near-dup for UNBOUNDED corpus sizes —
     * the form [[cosinePairs]] becomes at scale. Two defects of a fixed
-    * single-table bucketing, both caught by the 1M-vector ScaleProbe:
+    * single-table bucketing, both caught by the 1M-vector scale probe (BENCH.md):
     *
     *  1. fixed nBits makes per-bucket work QUADRATIC in n (1M uniform
     *     vectors at 12 bits = 244-row buckets = 237 s / GC livelock; at

@@ -1,6 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -53,10 +54,10 @@ object TranscriptTable {
   } + "\""
 
   /** Write one batch then commit it atomically. `manifestExtra` carries the
-    * batch lineage summary into the manifest for audit; the batch SCHEMA
-    * is always recorded (see [[read]] — schema evolution resolves from
-    * manifests alone, the Iceberg model, never from data-file footers).
-    * `statsCols` opts the batch into file-level min/max bounds
+    * batch lineage summary into the manifest for audit; [[commit]] records
+    * `df.schema` in its reader-side (relaxed) form — schema evolution
+    * resolves from manifests alone, the Iceberg model, never from data-file
+    * footers. `statsCols` opts the batch into file-level min/max bounds
     * ([[FileStats]]) for manifest-pruned reads ([[readRange]]) — one
     * batch-local columnar aggregate before the commit flip. */
   def writeBatch(df: DataFrame, table: String, batchId: String,
@@ -64,8 +65,8 @@ object TranscriptTable {
       statsCols: Seq[String] = Nil): Unit = {
     if (isCommitted(table, batchId)) return // idempotent resume
     writeData(df, table, batchId)
-    commit(table, batchId, manifestExtra + ("schema" -> df.schema.json) ++
-      statsExtras(df.sparkSession, table, batchId, statsCols))
+    commit(table, batchId, df.schema,
+      manifestExtra ++ statsExtras(df.sparkSession, table, batchId, statsCols))
   }
 
   /** File-stats manifest entries for a STAGED (written, uncommitted)
@@ -96,18 +97,18 @@ object TranscriptTable {
     df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(s"$table/data")
 
-  /** Atomically publish a staged batch (manifest tmp+rename). A batch that
-    * records a schema is validated against the table's current union BEFORE
-    * the manifest flips — every commit path (writeBatch, commitStaged,
-    * streaming ingest, compaction) funnels through here, so an incompatible
-    * type change fails the offending write instead of bricking reads. */
-  def commit(table: String, batchId: String,
-      manifestExtra: Map[String, String] = Map.empty): Unit = {
-    manifestExtra.get("schema").foreach { json =>
-      validateSchemaCompatible(table,
-        org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
+  /** Atomically publish a staged batch (manifest tmp+rename). The manifest
+    * records `schema` in the reader-side form ([[relaxNullable]]: every
+    * nullability flag true, as a parquet reader sees it), validated against
+    * the table's current union BEFORE the manifest flips — every commit path
+    * (writeBatch, commitStaged, streaming ingest, compaction, rewrites)
+    * funnels through here, so an incompatible type change fails the
+    * offending write instead of bricking reads. */
+  def commit(table: String, batchId: String, schema: StructType,
+      extra: Map[String, String] = Map.empty): Unit = {
+    val relaxed = relaxNullable(schema).asInstanceOf[StructType]
+    validateSchemaCompatible(table, relaxed)
+    val manifestExtra = extra + ("schema" -> relaxed.json)
     val target = dataDir(table, batchId)
     val mdir = manifestDir(table)
     Files.createDirectories(mdir)
@@ -205,15 +206,15 @@ object TranscriptTable {
     * touching that many distinct batches is a maintenance job, not a
     * pipeline tick). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long, Long), Option[org.apache.spark.sql.types.StructType]]()
+    (String, String, Long, Long), StructType]()
 
-  /** The batch's recorded schema, if its manifest carries one. The escaped
-    * string is scanned manually — a `(?:[^"\\]|\\.)*` regex stack-overflows
-    * on multi-KB schema JSON (backtracking frame per character). The cache
-    * key folds the manifest file's (size, mtime) — one stat instead of a
-    * read+parse — so a table deleted and rebuilt at the same path in one
-    * JVM can never serve a stale schema. */
-  def batchSchema(table: String, batchId: String): Option[org.apache.spark.sql.types.StructType] = {
+  /** The batch's recorded schema. Every manifest [[commit]] writes carries
+    * one, so a manifest without it came from outside the program and is an
+    * error, never a cue to infer the schema from data-file footers. The
+    * cache key folds the manifest file's (size, mtime) — one stat instead
+    * of a read+parse — so a table deleted and rebuilt at the same path in
+    * one JVM can never serve a stale schema. */
+  def batchSchema(table: String, batchId: String): StructType = {
     if (schemaCache.size > 8192) schemaCache.clear()
     val mf = manifestDir(table).resolve(s"manifest-$batchId.json")
     val attrs = Files.readAttributes(mf,
@@ -241,11 +242,11 @@ object TranscriptTable {
     Some(junstr(json.substring(start, i)))
   }
 
-  private def parseBatchSchema(table: String, batchId: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifestValue(table, batchId, "schema").map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  private def parseBatchSchema(table: String, batchId: String): StructType =
+    manifestValue(table, batchId, "schema")
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"manifest of batch $batchId in $table records no schema"))
 
   /** The batch's recorded per-file column bounds, if any. */
   def fileStats(table: String, batchId: String)
@@ -275,25 +276,18 @@ object TranscriptTable {
   }
 
   /** Recursively relax every nullability flag (top-level `nullable`, array
-    * `containsNull`, map `valueContainsNull`, nested struct fields) to true.
-    * Batch schemas reach the manifest through two paths that disagree ONLY
-    * in these flags — writeBatch records the pre-write `df.schema` (nested
-    * flags as constructed, often containsNull=false), while commitStaged
-    * records the schema a parquet reader sees (this relaxed form) — so
-    * schema COMPARISON must be nullability-insensitive and
-    * the resolved union must store the relaxed form, or two logically
-    * identical batches would fail the ADDING-only check and brick reads. */
-  private[graft] def relaxNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = relaxNullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(relaxNullable(a.elementType), containsNull = true)
-      case m: MapType =>
-        MapType(relaxNullable(m.keyType), relaxNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
+    * `containsNull`, map `valueContainsNull`, nested struct fields) to true:
+    * the form a parquet reader sees. [[commit]] records every batch schema
+    * in this form, so schemas that differ only in these flags (a pre-write
+    * `df.schema` often has containsNull=false) compare equal and the union
+    * never fails on them. */
+  private[graft] def relaxNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = relaxNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(relaxNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(relaxNullable(m.keyType), relaxNullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Union schema of the given batches per the table's evolution contract:
@@ -302,65 +296,55 @@ object TranscriptTable {
     * O(batches) driver-side string reads, never a data-file footer scan
     * (the parquet `mergeSchema` option reads EVERY footer, which at 100 TB
     * is a job of its own; Iceberg keeps schema in metadata for the same
-    * reason). Returns None when any batch predates schema recording —
-    * readers then fall back to single-schema behavior. */
-  private def unionSchema(table: String, batches: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val schemas = batches.map(b => batchSchema(table, b))
-    if (schemas.exists(_.isEmpty)) return None
-    val fields = scala.collection.mutable.LinkedHashMap
-      .empty[String, org.apache.spark.sql.types.StructField]
-    schemas.flatten.foreach(_.fields.foreach { f =>
-      val relaxed = relaxNullable(f.dataType)
+    * reason). */
+  private def unionSchema(table: String, batches: Seq[String]): StructType = {
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+    batches.foreach(b => batchSchema(table, b).fields.foreach { f =>
       fields.get(f.name) match {
-        case None => fields(f.name) = f.copy(dataType = relaxed, nullable = true)
+        case None => fields(f.name) = f
         case Some(prev) =>
-          require(prev.dataType == relaxed,
+          require(prev.dataType == f.dataType,
             s"schema evolution supports ADDING columns only: ${f.name} is " +
-              s"${prev.dataType.simpleString} in one batch and ${relaxed.simpleString} in another")
+              s"${prev.dataType.simpleString} in one batch and ${f.dataType.simpleString} in another")
       }
     })
-    Some(org.apache.spark.sql.types.StructType(fields.values.toSeq))
+    StructType(fields.values.toSeq)
   }
 
   /** Reject an incompatible batch AT COMMIT TIME (the Iceberg model): a
     * batch whose column type conflicts with the table's current union must
     * fail its own write, not poison every subsequent read/compact until a
-    * manifest is hand-edited. Compares nullability-insensitively (see
-    * [[relaxNullable]]); columns absent from history are additions and
-    * pass. Skipped when any live batch predates schema recording (no
-    * union is resolvable — legacy single-schema behavior). */
-  private def validateSchemaCompatible(table: String,
-      newSchema: org.apache.spark.sql.types.StructType): Unit = {
-    val live = liveBatches(table, null)
-    if (live.isEmpty) return
-    unionSchema(table, live).foreach { union =>
-      newSchema.fields.foreach { f =>
-        union.fields.find(_.name == f.name).foreach { prev =>
-          val relaxed = relaxNullable(f.dataType)
-          require(prev.dataType == relaxed,
-            s"incompatible batch schema rejected at commit: ${f.name} is " +
-              s"${prev.dataType.simpleString} in $table but " +
-              s"${relaxed.simpleString} in the new batch — schema evolution " +
-              "supports ADDING columns only")
-        }
+    * manifest is hand-edited. `newSchema` is relaxed like every recorded
+    * schema ([[relaxNullable]]); columns absent from history are additions
+    * and pass. */
+  private def validateSchemaCompatible(table: String, newSchema: StructType): Unit = {
+    val union = unionSchema(table, liveBatches(table))
+    newSchema.fields.foreach { f =>
+      union.fields.find(_.name == f.name).foreach { prev =>
+        require(prev.dataType == f.dataType,
+          s"incompatible batch schema rejected at commit: ${f.name} is " +
+            s"${prev.dataType.simpleString} in $table but " +
+            s"${f.dataType.simpleString} in the new batch — schema evolution " +
+            "supports ADDING columns only")
       }
     }
   }
 
+  /** The one read of committed data: `paths` (the batches' data dirs, or a
+    * pruned subset of their files) planned with the union of `batches`'
+    * recorded schemas, so added columns read as null in batches that
+    * predate them. */
+  private def scan(spark: SparkSession, table: String, batches: Seq[String],
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(unionSchema(table, batches)).parquet(paths: _*)
+
   /** Time-travel-ish read: only batches committed up to `asOfBatch`
-    * (inclusive, lexicographic batch-id order — ids are zero-padded).
-    * Schema evolution: when every live batch's manifest records a schema,
-    * the scan is planned with their UNION (added columns read as null in
-    * batches that predate them), resolved from manifests alone. */
+    * (inclusive, lexicographic batch-id order — ids are zero-padded),
+    * planned with their union schema ([[scan]]). */
   def readAsOf(spark: SparkSession, table: String, asOfBatch: String): DataFrame = {
     val batches = liveBatches(table, asOfBatch)
     require(batches.nonEmpty, s"no committed batches in $table")
-    val dirs = batches.map(b => dataDir(table, b))
-    unionSchema(table, batches) match {
-      case Some(schema) => spark.read.schema(schema).parquet(dirs: _*)
-      case None         => spark.read.parquet(dirs: _*)
-    }
+    scan(spark, table, batches, batches.map(dataDir(table, _)))
   }
 
   /** A manifest-pruned scan plan for `column` in [lo, hi]: which data
@@ -370,7 +354,14 @@ object TranscriptTable {
     * unavailable. The skipped count is the audit (no silent caps: how
     * much a query's layout saved is a queryable number, not a guess). */
   final case class ScanPlan(keptPaths: Seq[String], nFilesTotal: Int,
-      nFilesSkipped: Int, batches: Seq[String])
+      nFilesSkipped: Int, batches: Seq[String]) {
+    /** The batches owning at least one kept file: the only ones a pruned
+      * rewrite has to read. A kept path's parent is its batch's [[dataDir]]. */
+    def touchedBatches: Seq[String] = {
+      val dirs = keptPaths.map(p => Paths.get(p).getParent.getFileName.toString).toSet
+      batches.filter(b => dirs(s"batch=$b"))
+    }
+  }
 
   def planRange(table: String, column: String, lo: Any, hi: Any,
       asOfBatch: String = null): ScanPlan = {
@@ -414,11 +405,7 @@ object TranscriptTable {
       (if (hi == null) lit(true) else col(column) <= lit(hi))
     if (plan.keptPaths.isEmpty)
       return readAsOf(spark, table, asOfBatch).filter(lit(false))
-    unionSchema(table, plan.batches) match {
-      case Some(schema) =>
-        spark.read.schema(schema).parquet(plan.keptPaths: _*).filter(pred)
-      case None => spark.read.parquet(plan.keptPaths: _*).filter(pred)
-    }
+    scan(spark, table, plan.batches, plan.keptPaths).filter(pred)
   }
 
   /** Small-file compaction (Iceberg-style table maintenance): rewrite a set
@@ -481,19 +468,14 @@ object TranscriptTable {
       "a batch can be compacted only once")
     // compaction reads with the union schema too: the rewritten batch
     // must not silently drop a column added mid-history
-    val df = unionSchema(table, batchIds) match {
-      case Some(s) => spark.read.schema(s).parquet(batchIds.map(b => dataDir(table, b)): _*)
-      case None    => spark.read.parquet(batchIds.map(b => dataDir(table, b)): _*)
-    }
-    layout(df).write.mode(SaveMode.Overwrite)
-      .parquet(dataDir(table, newBatchId))
+    val df = scan(spark, table, batchIds, batchIds.map(dataDir(table, _)))
+    writeData(layout(df), table, newBatchId)
     // carry the replaced row counts and lineage so manifest-only monitoring
     // stays exact: the rows are the same, so their lineage merges
     val lineage = batchIds.flatMap(manifestValue(table, _, "lineage"))
-    commit(table, newBatchId, Map(
+    commit(table, newBatchId, df.schema, Map(
       "replaces" -> batchIds.sorted.mkString(","),
-      "n_turns" -> batchIds.map(nTurns(table, _)).sum.toString,
-      "schema" -> df.schema.json) ++
+      "n_turns" -> batchIds.map(nTurns(table, _)).sum.toString) ++
       (if (lineage.isEmpty) Map.empty else Map("lineage" -> Lineage.mergeEntries(lineage))) ++
       statsExtras(spark, table, newBatchId,
         (statsCols ++ inheritedStatsCols(table, batchIds)).distinct))
@@ -548,10 +530,8 @@ object TranscriptTable {
     // a typo'd column must fail NOW, not silently no-op on every tick
     // whose range happens to miss all file bounds
     val tableUnion = unionSchema(table, liveBatches(table))
-    tableUnion.foreach { s =>
-      val missing = set.keySet -- s.fieldNames.toSet
-      require(missing.isEmpty, s"SET columns absent from table: $missing")
-    }
+    val absent = set.keySet -- tableUnion.fieldNames.toSet
+    require(absent.isEmpty, s"SET columns absent from table: $absent")
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     cowRewrite(spark, table, column, lo, hi, newBatchId, statsCols,
       (df, cond) => {
@@ -560,15 +540,7 @@ object TranscriptTable {
         // SQL UPDATE semantics, so the rewrite ADDS it (typed from the
         // recorded union) with old-value null, instead of failing a
         // rewrite the up-front validation already admitted
-        val missing = (set.keySet -- df.columns.toSet).toSeq.sorted
-        val missingFields = missing.map { c =>
-          tableUnion.flatMap(_.fields.find(_.name == c)).getOrElse(
-            // no recorded union (pre-schema-era batches): no type to give
-            // the null, so the strict failure stands
-            throw new IllegalArgumentException(
-              s"SET column absent from the touched batches and no recorded " +
-                s"table schema to type it: $c"))
-        }
+        val missingFields = (set.keySet -- df.columns.toSet).toSeq.sorted.map(tableUnion(_))
         // ONE select: every when() resolves cond and the SET expressions
         // against the INPUT frame — a withColumn fold would evaluate
         // later SETs (and the condition) on partially-updated rows
@@ -650,27 +622,16 @@ object TranscriptTable {
         }
       } else {
         val r = keys.agg(fmin(col(keyCol)), fmax(col(keyCol))).head()
-        val plan = planRange(table, keyCol, r.get(0), r.get(1))
-        plan.batches.filter(b =>
-          plan.keptPaths.exists(_.startsWith(dataDir(table, b) + "/")))
+        planRange(table, keyCol, r.get(0), r.get(1)).touchedBatches
       }
     val effStats = (statsCols :+ keyCol).distinct
     if (touched.isEmpty) {
       // pure insert: provably no key matches — a plain new batch
       val rowsUpd = u.count()
-      writeData(u, table, newBatchId)
-      commit(table, newBatchId, Map(
-        "n_turns" -> rowsUpd.toString,
-        "schema" -> u.schema.json) ++
-        statsExtras(spark, table, newBatchId, effStats))
+      writeBatch(u, table, newBatchId, Map("n_turns" -> rowsUpd.toString), effStats)
       return RewriteStats(live.size, 0, 0L, rowsUpd)
     }
-    val dfT = unionSchema(table, touched) match {
-      case Some(s) =>
-        spark.read.schema(s).parquet(touched.map(b => dataDir(table, b)): _*)
-      case None =>
-        spark.read.parquet(touched.map(b => dataDir(table, b)): _*)
-    }
+    val dfT = scan(spark, table, touched, touched.map(dataDir(table, _)))
     val rowsBefore = dfT.count()
     val survivors =
       if (nKeys <= maxExactKeys) dfT.join(broadcast(keys), Seq(keyCol), "left_anti")
@@ -693,20 +654,12 @@ object TranscriptTable {
     import org.apache.spark.sql.functions.{col, lit}
     if (isCommitted(table, newBatchId)) return RewriteStats(0, 0, 0L, 0L)
     val plan = planRange(table, column, lo, hi)
-    val touched = plan.batches.filter { b =>
-      val prefix = dataDir(table, b) + "/"
-      plan.keptPaths.exists(_.startsWith(prefix))
-    }
+    val touched = plan.touchedBatches
     if (touched.isEmpty)
       return RewriteStats(plan.batches.size, 0, 0L, 0L)
     require(touched.forall(_ < newBatchId),
       s"rewrite batch id $newBatchId must sort after the batches it replaces")
-    val df = unionSchema(table, touched) match {
-      case Some(s) =>
-        spark.read.schema(s).parquet(touched.map(b => dataDir(table, b)): _*)
-      case None =>
-        spark.read.parquet(touched.map(b => dataDir(table, b)): _*)
-    }
+    val df = scan(spark, table, touched, touched.map(dataDir(table, _)))
     val rowsBefore = df.count()
     val cond = (if (lo == null) lit(true) else col(column) >= lit(lo)) &&
       (if (hi == null) lit(true) else col(column) <= lit(hi))
@@ -733,16 +686,15 @@ object TranscriptTable {
   private def commitRewrite(spark: SparkSession, table: String,
       touched: Seq[String], newBatchId: String, out: DataFrame,
       statsCols: Seq[String]): Long = {
-    out.write.mode(SaveMode.Overwrite).parquet(dataDir(table, newBatchId))
+    writeData(out, table, newBatchId)
     val rowsAfter = spark.read.schema(out.schema)
       .parquet(dataDir(table, newBatchId)).count()
     val retired = replacedBatches(table)
     require(touched.forall(!retired.contains(_)),
       s"concurrently superseded during rewrite: ${touched.filter(retired.contains)}")
-    commit(table, newBatchId, Map(
+    commit(table, newBatchId, out.schema, Map(
       "replaces" -> touched.sorted.mkString(","),
-      "n_turns" -> rowsAfter.toString,
-      "schema" -> out.schema.json) ++
+      "n_turns" -> rowsAfter.toString) ++
       statsExtras(spark, table, newBatchId,
         (statsCols ++ inheritedStatsCols(table, touched)).distinct))
     rowsAfter

@@ -383,11 +383,10 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
 
   test("schema evolution: nested nullability flags never fail the union") {
     // Two logically identical batches can differ ONLY in nested nullability:
-    // writeBatch records the pre-write df.schema (containsNull as
-    // constructed, often false), while commitStaged records a post-parquet-
-    // read schema (Spark normalizes nested fields to nullable). The union
-    // must be nullability-insensitive or a valid table becomes unreadable
-    // (ADVICE r5 medium finding).
+    // a pre-write df.schema keeps containsNull as constructed (often false),
+    // while a post-parquet-read schema has every nested field nullable.
+    // commit records both in the relaxed form, so the union never fails on
+    // them and a valid table stays readable.
     val out = "/tmp/graft_schema_nulls"
     rmrf(out)
     val sp = spark
@@ -396,17 +395,47 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(!strict.schema("xs").dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull)
     TranscriptTable.writeBatch(strict, out, "b000")
+    assert(TranscriptTable.manifestValue(out, "b000", "schema") ==
+      Some(TranscriptTable.relaxNullable(strict.schema).json),
+      "writeBatch must record the reader-side (relaxed) schema")
     // second batch: the SAME data committed via the staged path, whose
     // recorded schema is the post-parquet-read (relaxed) form
     TranscriptTable.writeData(Seq((2L, Seq(3))).toDF("id", "xs"), out, "b001")
     val reread = spark.read.parquet(TranscriptTable.dataDir(out, "b001"))
     assert(reread.schema("xs").dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull)
-    TranscriptTable.commit(out, "b001", Map("schema" -> reread.schema.json))
+    TranscriptTable.commit(out, "b001", reread.schema)
     // both read paths and compaction plan with the relaxed union
     assert(TranscriptTable.read(spark, out).count() == 2)
     TranscriptTable.compact(spark, out, Seq("b000", "b001"), "b002")
     assert(TranscriptTable.read(spark, out).count() == 2)
+    rmrf(out)
+  }
+
+  test("a manifest without a recorded schema fails reads, compaction and commits by name") {
+    // every manifest the program writes records its batch schema, so one
+    // without it came from outside: readers must name the batch, never
+    // fall back to inferring the schema from data-file footers
+    val out = "/tmp/graft_schema_missing"
+    rmrf(out)
+    val sp = spark
+    import sp.implicits._
+    TranscriptTable.writeBatch(Seq((1L, "x")).toDF("id", "text"), out, "b000")
+    val mf = TranscriptTable.manifestDir(out).resolve("manifest-b000.json")
+    val stripped = new String(Files.readAllBytes(mf), "UTF-8")
+      .replaceAll(",\\n  \"schema\": \"[^\\n]*\"", "")
+    assert(!stripped.contains("\"schema\"") && stripped.contains("\"files\""), stripped)
+    Files.write(mf, stripped.getBytes("UTF-8"))
+    def failsNaming(what: String)(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains("b000") && e.getMessage.contains(out),
+        s"$what: ${e.getMessage}")
+    }
+    failsNaming("read")(TranscriptTable.read(spark, out))
+    failsNaming("compact")(TranscriptTable.compact(spark, out, Seq("b000"), "c000"))
+    failsNaming("writeBatch")(
+      TranscriptTable.writeBatch(Seq((2L, "y")).toDF("id", "text"), out, "b001"))
+    assert(TranscriptTable.committedBatches(out) == Seq("b000"))
     rmrf(out)
   }
 
@@ -501,7 +530,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
       new Thread(() => {
         barrier.await()
         try {
-          TranscriptTable.commit(out, "b000", Map("writer" -> i.toString))
+          TranscriptTable.commit(out, "b000", df.schema, Map("writer" -> i.toString))
           results.add(s"ok-$i")
         } catch {
           case _: IllegalStateException => results.add(s"lost-$i")

@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * This is the built-in form of the classic two-stage top-k escape; a
   * hand-rolled (key, partition-id) pre-rank was measured at parity at 20M
-  * rows / 95%-hot key while adding a second exchange (ScaleProbe `topk`
-  * section, BENCH.md round 7), so the repo deliberately ships the plain
+  * rows / 95%-hot key while adding a second exchange (BENCH.md round 7b,
+  * per-key top-k), so the repo deliberately ships the plain
   * window form everywhere. If a Spark upgrade or a config change
   * (spark.sql.optimizer.windowGroupLimitThreshold, default 1000 — all our
   * k values sit far below it) ever stops the rule from firing, this spec
