@@ -31,9 +31,10 @@ final case class ExtractedTurn(
   *   → salted repartition                     (shuffle #1, skew-proof map stage)
   *   → mapPartitions Extract.extract          (fused stages 2,4-8; no shuffle)
   *   → batch column from conv_bucket
-  *   → repartition(conv_id)
-  *     .sortWithinPartitions(batch, conv_id,  (shuffle #2: each conversation
-  *                           turn_idx)         whole and turn-ordered in one file)
+  *   → repartitionById(batch's task range     (shuffle #2: each task holds one
+  *       + hash(conv_id) within it)            batch; each conversation whole)
+  *     .sortWithinPartitions(batch, conv_id,  (turn-ordered in one file; one
+  *                           turn_idx)         file per write task)
   *   → observe(per-bucket lineage)            (in the write's result stage)
   *   → TranscriptTable.writeData              (partitionBy(batch), dynamic
   *                                              overwrite: staged, invisible)
@@ -98,6 +99,31 @@ object ExtractJob {
   def observedLineage(obs: Observation): Seq[Long] =
     Await.result(obs.future, 10.minutes).getAs[Seq[Long]]("lineage")
 
+  /** How [[stage]] routes a row to a write task: `tasks` write tasks,
+    * `per = ceil(parts / batches.size)` for each batch. `task` is
+    * `idx * per + pmod(hash(conv_id), per)`, where `idx` is the position in
+    * `batches` of the batch owning the row's conv_bucket, and `batch` is
+    * that batch's id, read from the same `idx`. Every row must belong to
+    * one of `batches`: the exchange does not reject a null task (Spark
+    * 4.1 sends it to task 0, and an out-of-range one to its `pmod`), so
+    * [[stage]] filters its input to the batches' buckets first.
+    *
+    * The spread within a batch is Murmur3 `hash`, not `xxhash64`:
+    * conv_bucket is `pmod(xxhash64(conv_id), 64)`, so `pmod(xxhash64, per)`
+    * would follow the bucket whenever `per` divides 64 and leave some of a
+    * batch's tasks empty. */
+  final case class WriteRouting(tasks: Int, task: Column, batch: Column)
+
+  def writeRouting(batches: Seq[Batch], parts: Int): WriteRouting = {
+    val per = (parts + batches.size - 1) / batches.size
+    def owns(b: Batch) = col("conv_bucket").between(b.lo, b.hi - 1)
+    val idx = batches.indices.tail.foldLeft(when(owns(batches.head), 0))(
+      (c, i) => c.when(owns(batches(i)), i))
+    WriteRouting(batches.size * per,
+      idx * per + pmod(hash(col("conv_id")), lit(per)),
+      element_at(typedLit(batches.map(_.id)), idx + 1))
+  }
+
   /** Extract `turns` and stage them as `batches` in one write: each row
     * lands in the data directory of the batch owning its conv_bucket, and
     * every batch stays invisible until [[commitStaged]]. Returns the
@@ -105,12 +131,14 @@ object ExtractJob {
     * all of `batches`; [[Batch.lineageOf]] slices it per batch) and the
     * schema it wrote.
     *
-    * Layout: hash-partitioned by conv_id and sorted by (batch, conv_id,
-    * turn_idx) within a partition, so each conversation is whole and
-    * turn-ordered in one file. A range exchange would run a sampling job
-    * that recomputes the extraction map; the hash exchange does not. The
-    * trade-off: one giant conversation skews one write task, while the
-    * extraction map stays salted.
+    * Layout: routed by [[writeRouting]] (each write task holds rows of one
+    * batch only, spread over its tasks by `hash(conv_id)`) and sorted by
+    * (batch, conv_id, turn_idx) within a partition, so each conversation is
+    * whole and turn-ordered in one file, and a batch gets at most
+    * `ceil(parts / batches.size)` files. A range exchange would run a
+    * sampling job that recomputes the extraction map; the pass-through
+    * exchange does not. The trade-off: one giant conversation skews one
+    * write task, while the extraction map stays salted.
     *
     * Scale-safe, exactly-once lineage: extraction runs once, streamed
     * straight to parquet (no cache, which at 100 TB would double I/O), and
@@ -128,11 +156,9 @@ object ExtractJob {
     val owned = turns.withColumn("conv_bucket", bucketCol)
       .filter(col("conv_bucket").isin(batches.flatMap(_.buckets): _*))
     val extracted = extractTurns(spark, owned, parts).toDF()
-    def owns(b: Batch) = col("conv_bucket").between(b.lo, b.hi - 1)
-    val batch = batches.tail.foldLeft(when(owns(batches.head), batches.head.id))(
-      (c, b) => c.when(owns(b), b.id))
-    val ordered = extracted.withColumn("batch", batch)
-      .repartition(parts, col("conv_id"))
+    val route = writeRouting(batches, parts)
+    val ordered = extracted.withColumn("batch", route.batch)
+      .repartitionById(route.tasks, route.task)
       .sortWithinPartitions("batch", "conv_id", "turn_idx")
     val obs = Observation()
     TranscriptTable.writeData(ordered.observe(obs, lineageColumn), outTable)

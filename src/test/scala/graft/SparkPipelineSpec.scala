@@ -65,8 +65,16 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     val n1 = read1.count()
     assert(n1 == turns.count())
 
-    // stable ordering within files: conv_id/turn_idx sorted within partitions
-    val files = read1.select(input_file_name().as("f"), col("conv_id"), col("turn_idx"))
+    // layout contract: each conversation lives in exactly one file, its
+    // turns ascending by row position inside that file
+    val placed = read1.select(col("_metadata.file_path"), col("_metadata.row_index"),
+      col("conv_id"), col("turn_idx")).collect().groupBy(_.getString(2))
+    placed.foreach { case (conv, rows) =>
+      assert(rows.map(_.getString(0)).distinct.length == 1, s"$conv spans files")
+      val turnIdx = rows.sortBy(_.getLong(1)).map(_.getInt(3))
+      assert(turnIdx.zip(turnIdx.drop(1)).forall { case (a, b) => a < b },
+        s"$conv out of turn order in its file")
+    }
     // turn_idx dense per conversation after read-back
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -188,6 +196,70 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     }
     assert(digest() == d1, "resume must reproduce identical content")
     rmrf(out)
+  }
+
+  test("each write task writes one batch") {
+    val out = "/tmp/graft_batch_aligned"
+    val out64 = "/tmp/graft_batch_aligned_64"
+    Seq(out, out64).foreach(rmrf)
+    val turns = Synth.turns(spark, 0.001, 4)
+    def parquet(table: String, b: String): Map[String, Long] =
+      new java.io.File(TranscriptTable.dataDir(table, b)).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
+    def nFiles(table: String, b: String): Int = {
+      val m = new String(Files.readAllBytes(
+        TranscriptTable.manifestDir(table).resolve(s"manifest-$b.json")), "UTF-8")
+      "\"n_files\": (\\d+)".r.findFirstMatchIn(m).get.group(1).toInt
+    }
+    // at most ceil(parts / pending) files per batch, all listed by the manifest
+    def checkFiles(table: String, batches: Seq[String], most: Int): Unit = batches.foreach { b =>
+      val n = parquet(table, b).size
+      assert(n >= 1 && n <= most, s"$b has $n files, wants 1 to $most")
+      assert(nFiles(table, b) == n, s"n_files of $b")
+    }
+
+    // 4 batches over 8 write tasks: 2 tasks, so at most 2 files, per batch
+    ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8)
+    checkFiles(out, Seq("b000", "b001", "b002", "b003"), 2)
+    // a resume of 2 batches spreads each over 4 tasks; committed ones stay
+    val kept = Seq("b000", "b002").map(parquet(out, _))
+    Seq("b001", "b003").foreach(b =>
+      Files.delete(TranscriptTable.manifestDir(out).resolve(s"manifest-$b.json")))
+    ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8)
+    assert(Seq("b000", "b002").map(parquet(out, _)) == kept, "committed batches are never rewritten")
+    checkFiles(out, Seq("b001", "b003"), 4)
+
+    // 64 batches over 8 parts: one task, so one file (empty or not), per batch
+    ExtractJob.run(spark, turns, out64, nBatches = 64, saltPartitions = 8)
+    checkFiles(out64, TranscriptTable.committedBatches(out64), 1)
+    assert(TranscriptTable.committedBatches(out64).length == 64)
+    Seq(out, out64).foreach(rmrf)
+  }
+
+  test("write routing: every task is used and holds rows of one batch") {
+    // The routing is a plain column, checked here with no shuffle. The ids
+    // are Synth's conversation ids at sf0.1 (4,000 conversations): sf0.001
+    // has 40, fewer than the 128 tasks. With 4 batches each gets 32 tasks.
+    // Spreading a batch by `pmod(xxhash64(conv_id), 32)` would fail this:
+    // conv_bucket is `pmod(xxhash64(conv_id), 64)` and 32 divides 64, so
+    // that spread is conv_bucket mod 32, and a batch's 16 buckets would
+    // reach only 16 of its 32 tasks.
+    val batches = (0 until 4).map(b => ExtractJob.Batch(f"b$b%03d", b * 16, (b + 1) * 16))
+    val route = ExtractJob.writeRouting(batches, 128)
+    assert(route.tasks == 128)
+    val rows = spark.range(Synth.convsForSf(0.1))
+      .select(format_string("conv-%08d", col("id")).as("conv_id"))
+      .withColumn("conv_bucket", ExtractJob.bucketCol)
+      .select(route.task, route.batch, col("conv_bucket"))
+      .collect()
+    val byTask = rows.groupBy(_.getInt(0))
+    val unused = (0 until 128).filterNot(byTask.contains)
+    assert(unused.isEmpty, s"tasks never used: $unused")
+    byTask.foreach { case (task, rs) =>
+      val owner = batches(task / 32)
+      assert(rs.forall(r => r.getString(1) == owner.id && owner.buckets.contains(r.getInt(2))),
+        s"task $task holds rows of a batch other than ${owner.id}")
+    }
   }
 
   test("incremental pipeline: multi-batch ticks, warm store, replay no-op, first-write-wins") {
