@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 
 /** The one runner for declared SparkEntry queries, on `Bench.session`:
   *
-  *   runMain graft.jobs.QueryRunner <rows|time|plan> <q1,q2,...> <sfDir> [reps] [cpus]
+  *   runMain graft.jobs.QueryRunner <rows|time|plan> <q1,q2,...|all> <sfDir> [reps] [cpus]
   *
   *  - rows: row count and the first 5 rows of each query
   *  - time: Bench-style untimed warmup, then `reps` back-to-back runs of
@@ -15,22 +15,24 @@ import scala.util.control.NonFatal
   *  - plan: explain("formatted") of each query as a docs/PLANS.md section
   *
   * A query that throws is reported as "failed", never as a timing, and
-  * the runner then exits 1. `reps` defaults to 5, `cpus` to the host's. */
+  * the runner then exits 1. `all` names every declared query. `reps`
+  * defaults to 5, `cpus` to the host's. */
 object QueryRunner {
 
   private val Modes = Set("rows", "time", "plan")
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3 || !Modes(args(0))) {
-      System.err.println("usage: QueryRunner <rows|time|plan> <q1,q2,...> <sfDir> [reps] [cpus]")
+      System.err.println("usage: QueryRunner <rows|time|plan> <q1,q2,...|all> <sfDir> [reps] [cpus]")
       sys.exit(2)
     }
     val reps = if (args.length > 3) args(3).toInt else 5
     val cpus = if (args.length > 4) args(4)
       else Runtime.getRuntime.availableProcessors.toString
+    val names = if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted else args(1).split(',').toSeq
     val spark = graft.Bench.session(cpus)
     val status =
-      try run(spark, args(0), args(1).split(',').toSeq, args(2), reps)
+      try run(spark, args(0), names, args(2), reps)
       finally spark.stop()
     sys.exit(status)
   }

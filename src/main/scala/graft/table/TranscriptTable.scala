@@ -12,18 +12,22 @@ import scala.jdk.CollectionConverters._
   *
   *   table/
   *     data/batch=<id>/...parquet      -- data files for one batch
-  *     _manifests/manifest-<id>.json   -- atomic commit marker (tmp+rename);
-  *                                        also the batch's schema, row count
-  *                                        and lineage ([[Lineage]])
+  *     _manifests/manifest-<id>.json   -- atomic commit marker (tmp+link);
+  *                                        also the batch's files, schema,
+  *                                        row count and lineage ([[Lineage]])
   *
   * A batch is visible iff its manifest exists; a crashed batch leaves only
   * orphan data files that a re-run overwrites. Re-running a committed batch
-  * is a no-op (idempotent resume). A real Iceberg catalog can implement the
-  * same interface unchanged. */
+  * is a no-op (idempotent resume). [[Manifest]] is the one codec of the
+  * manifest JSON: [[commit]] writes its `render`, and every reader goes
+  * through [[manifest]], one bounded cache of parsed records. A real Iceberg
+  * catalog can implement the same interface unchanged. */
 object TranscriptTable {
 
   def manifestDir(table: String): Path = Paths.get(table, "_manifests")
   def dataDir(table: String, batchId: String): String = s"$table/data/batch=$batchId"
+  private def manifestPath(table: String, batchId: String): Path =
+    manifestDir(table).resolve(s"manifest-$batchId.json")
 
   def committedBatches(table: String): Seq[String] = {
     val dir = manifestDir(table)
@@ -38,20 +42,7 @@ object TranscriptTable {
   }
 
   def isCommitted(table: String, batchId: String): Boolean =
-    Files.exists(manifestDir(table).resolve(s"manifest-$batchId.json"))
-
-  /** JSON string literal with full escaping (quotes, backslashes, control
-    * chars) — manifest values such as lineage summaries must never be able
-    * to corrupt the manifest that committedRowCount/audit readers parse. */
-  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case '\n'         => "\\n"
-    case '\r'         => "\\r"
-    case '\t'         => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
+    Files.exists(manifestPath(table, batchId))
 
   /** Write one batch then commit it atomically. `manifestExtra` carries the
     * batch lineage summary into the manifest for audit; [[commit]] records
@@ -97,36 +88,28 @@ object TranscriptTable {
     df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(s"$table/data")
 
-  /** Atomically publish a staged batch (manifest tmp+rename). The manifest
-    * records `schema` in the reader-side form ([[relaxNullable]]: every
-    * nullability flag true, as a parquet reader sees it), validated against
-    * the table's current union BEFORE the manifest flips — every commit path
-    * (writeBatch, commitStaged, streaming ingest, compaction, rewrites)
-    * funnels through here, so an incompatible type change fails the
-    * offending write instead of bricking reads. */
+  /** Atomically publish a staged batch: a [[Manifest]] of the batch's
+    * parquet files, `extra` and `schema`, written to a tmp file and
+    * hard-linked into place. The schema is recorded in the reader-side form
+    * ([[relaxNullable]]: every nullability flag true, as a parquet reader
+    * sees it) and must union with the live batches' schemas BEFORE the
+    * manifest flips — every commit path (writeBatch, commitStaged,
+    * streaming ingest, compaction, rewrites) funnels through here, so an
+    * incompatible type change fails the offending write instead of
+    * bricking reads. */
   def commit(table: String, batchId: String, schema: StructType,
       extra: Map[String, String] = Map.empty): Unit = {
     val relaxed = relaxNullable(schema).asInstanceOf[StructType]
-    validateSchemaCompatible(table, relaxed)
-    val manifestExtra = extra + ("schema" -> relaxed.json)
-    val target = dataDir(table, batchId)
+    unionSchema(table, liveBatches(table), Some(batchId -> relaxed)) // throws on a type change
     val mdir = manifestDir(table)
     Files.createDirectories(mdir)
     val files = {
-      val stream = Files.list(Paths.get(target))
+      val stream = Files.list(Paths.get(dataDir(table, batchId)))
       try stream.iterator.asScala
         .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq.sorted
       finally stream.close()
     }
-    val json = {
-      val extras = manifestExtra.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"  ${jstr(k)}: ${jstr(v)}" }
-      val fileList = files.map(f => s"    ${jstr(f)}").mkString(",\n")
-      (Seq(
-        s"""  "batch_id": ${jstr(batchId)}""",
-        s"""  "n_files": ${files.length}""",
-        s"""  "files": [\n$fileList\n  ]""") ++ extras).mkString("{\n", ",\n", "\n}\n")
-    }
+    val json = Manifest(batchId, files, extra + ("schema" -> relaxed.json)).render
     // writer-unique tmp: two racing committers of the same batch id must
     // never share a staging file, or the winner could publish the loser's
     // half-written bytes
@@ -137,8 +120,7 @@ object TranscriptTable {
     // when two writers race on one batch id exactly one wins and the loser
     // gets a clean error — never a torn or silently overwritten manifest.
     // (A plain ATOMIC_MOVE rename REPLACES an existing target on POSIX.)
-    val manifest = mdir.resolve(s"manifest-$batchId.json")
-    try Files.createLink(manifest, tmp)
+    try Files.createLink(manifestPath(table, batchId), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         Files.deleteIfExists(tmp)
@@ -148,17 +130,38 @@ object TranscriptTable {
     Files.delete(tmp)
   }
 
-  private def manifestJson(table: String, b: String): String =
-    new String(Files.readAllBytes(
-      manifestDir(table).resolve(s"manifest-$b.json")), UTF_8)
+  private val manifests = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Long, Long), Manifest]()
+
+  /** The committed batch's manifest record: the one read path of manifest
+    * files. A manifest is immutable once committed (CAS link; compaction
+    * writes NEW manifests), so each is read and parsed once per JVM and
+    * only stat'ed on later uses. The cache key folds the file's (size,
+    * mtime), so a table deleted and rebuilt at the same path in one JVM can
+    * never serve a stale record. Bounded: cleared wholesale past 8192
+    * entries (a JVM touching that many batches is a maintenance job). */
+  def manifest(table: String, batchId: String): Manifest = {
+    if (manifests.size > 8192) manifests.clear()
+    val mf = manifestPath(table, batchId)
+    val attrs = Files.readAttributes(mf,
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    manifests.computeIfAbsent(
+      (table, batchId, attrs.size, attrs.lastModifiedTime.toMillis), _ => {
+        val m = Manifest.parse(new String(Files.readAllBytes(mf), UTF_8))
+        require(m.batchId == batchId, s"manifest-$batchId.json in $table records batch ${m.batchId}")
+        m
+      })
+  }
+
+  private[graft] def manifestValue(table: String, batchId: String, key: String) =
+    manifest(table, batchId).entries.get(key)
 
   /** Batch ids retired by compaction manifests (optionally only manifests
     * up to `upTo`, for time travel). Driver-side manifest reads only. */
   def replacedBatches(table: String, upTo: String = null): Set[String] =
     committedBatches(table)
       .filter(b => upTo == null || b <= upTo)
-      .flatMap(b => manifestValue(table, b, "replaces")
-        .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil))
+      .flatMap(manifest(table, _).replaces)
       .toSet
 
   /** The batches a snapshot reader should scan: committed minus retired.
@@ -167,7 +170,7 @@ object TranscriptTable {
     * [[vacuum]] reclaims their files — the expire-snapshots trade-off). */
   def liveBatches(table: String, asOf: String = null): Seq[String] = {
     val all = committedBatches(table).filter(b => asOf == null || b <= asOf)
-    val retired = replacedBatches(table, asOf)
+    val retired = all.flatMap(manifest(table, _).replaces).toSet
     all.filterNot(retired.contains)
   }
 
@@ -175,105 +178,28 @@ object TranscriptTable {
   def read(spark: SparkSession, table: String): DataFrame =
     readAsOf(spark, table, null)
 
-  /** JSON-string unescape for manifest values (inverse of [[jstr]]). */
-  private[graft] def junstr(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => b += '"'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n'  => b += '\n'; i += 2
-          case 'r'  => b += '\r'; i += 2
-          case 't'  => b += '\t'; i += 2
-          case 'u'  =>
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case o    => b += o; i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-
-  /** Parsed-schema cache: a manifest is immutable once committed (CAS
-    * link; compaction writes NEW manifests), so its schema can be parsed
-    * once per JVM. Without this, commit-time validation re-reads and
-    * re-parses every live manifest on every commit — O(batches) file
-    * reads per tick, O(n²) over an ongoing table's life (review
-    * finding). Bounded: cleared wholesale past 8192 entries (a JVM
-    * touching that many distinct batches is a maintenance job, not a
-    * pipeline tick). */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long, Long), StructType]()
-
   /** The batch's recorded schema. Every manifest [[commit]] writes carries
     * one, so a manifest without it came from outside the program and is an
-    * error, never a cue to infer the schema from data-file footers. The
-    * cache key folds the manifest file's (size, mtime) — one stat instead
-    * of a read+parse — so a table deleted and rebuilt at the same path in
-    * one JVM can never serve a stale schema. */
-  def batchSchema(table: String, batchId: String): StructType = {
-    if (schemaCache.size > 8192) schemaCache.clear()
-    val mf = manifestDir(table).resolve(s"manifest-$batchId.json")
-    val attrs = Files.readAttributes(mf,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    schemaCache.computeIfAbsent(
-      (table, batchId, attrs.size, attrs.lastModifiedTime.toMillis),
-      _ => parseBatchSchema(table, batchId))
-  }
-
-  /** A string-valued manifest entry, unescaped. Scanned manually — a
-    * `(?:[^"\\]|\\.)*` regex stack-overflows on multi-KB values
-    * (backtracking frame per character). */
-  private[graft] def manifestValue(table: String, batchId: String,
-      key: String): Option[String] = {
-    val json = manifestJson(table, batchId)
-    val marker = "\"" + key + "\": \""
-    val keyAt = json.indexOf(marker)
-    if (keyAt < 0) return None
-    val start = keyAt + marker.length
-    var i = start
-    while (i < json.length && json.charAt(i) != '"') {
-      if (json.charAt(i) == '\\') i += 2 else i += 1
-    }
-    if (i >= json.length) return None
-    Some(junstr(json.substring(start, i)))
-  }
-
-  private def parseBatchSchema(table: String, batchId: String): StructType =
-    manifestValue(table, batchId, "schema")
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(
-        s"manifest of batch $batchId in $table records no schema"))
+    * error, never a cue to infer the schema from data-file footers. */
+  def batchSchema(table: String, batchId: String): StructType =
+    manifest(table, batchId).schema.getOrElse(throw new IllegalStateException(
+      s"manifest of batch $batchId in $table records no schema"))
 
   /** The batch's recorded per-file column bounds, if any. */
   def fileStats(table: String, batchId: String)
       : Map[String, Map[String, FileStats.ColStat]] =
-    manifestValue(table, batchId, "file_stats")
-      .map(FileStats.decode).getOrElse(Map.empty)
+    manifest(table, batchId).fileStats
 
   /** Stats columns recorded by the given batches' manifests — rewrites
     * (delete/update/merge/compact) inherit them so superseding a batch
     * never silently LOSES prunability a layout had: a table skippable on
     * (ts, event_id) stays skippable on both after any rewrite. */
   private def inheritedStatsCols(table: String, batches: Seq[String]): Seq[String] =
-    batches.flatMap(b => manifestValue(table, b, "stats_cols")
-      .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)).distinct
+    batches.flatMap(manifest(table, _).statsCols).distinct
 
   /** Data files listed by the batch's manifest (names, not paths). */
-  def batchFiles(table: String, batchId: String): Seq[String] = {
-    val json = manifestJson(table, batchId)
-    val start = json.indexOf("\"files\": [")
-    if (start < 0) return Seq.empty
-    val end = json.indexOf(']', start)
-    val m = java.util.regex.Pattern.compile("\"([^\"]+)\"")
-      .matcher(json.substring(start + "\"files\": [".length, end))
-    val b = Seq.newBuilder[String]
-    while (m.find()) b += m.group(1)
-    b.result()
-  }
+  def batchFiles(table: String, batchId: String): Seq[String] =
+    manifest(table, batchId).files
 
   /** Recursively relax every nullability flag (top-level `nullable`, array
     * `containsNull`, map `valueContainsNull`, nested struct fields) to true:
@@ -290,44 +216,29 @@ object TranscriptTable {
     case other => other
   }
 
-  /** Union schema of the given batches per the table's evolution contract:
-    * ADDING columns is supported (old rows read the new column as null);
-    * changing a column's type is not. Resolution is manifest-only —
-    * O(batches) driver-side string reads, never a data-file footer scan
-    * (the parquet `mergeSchema` option reads EVERY footer, which at 100 TB
-    * is a job of its own; Iceberg keeps schema in metadata for the same
-    * reason). */
-  private def unionSchema(table: String, batches: Seq[String]): StructType = {
-    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-    batches.foreach(b => batchSchema(table, b).fields.foreach { f =>
-      fields.get(f.name) match {
-        case None => fields(f.name) = f
-        case Some(prev) =>
-          require(prev.dataType == f.dataType,
-            s"schema evolution supports ADDING columns only: ${f.name} is " +
-              s"${prev.dataType.simpleString} in one batch and ${f.dataType.simpleString} in another")
-      }
-    })
-    StructType(fields.values.toSeq)
-  }
-
-  /** Reject an incompatible batch AT COMMIT TIME (the Iceberg model): a
-    * batch whose column type conflicts with the table's current union must
-    * fail its own write, not poison every subsequent read/compact until a
-    * manifest is hand-edited. `newSchema` is relaxed like every recorded
-    * schema ([[relaxNullable]]); columns absent from history are additions
-    * and pass. */
-  private def validateSchemaCompatible(table: String, newSchema: StructType): Unit = {
-    val union = unionSchema(table, liveBatches(table))
-    newSchema.fields.foreach { f =>
-      union.fields.find(_.name == f.name).foreach { prev =>
-        require(prev.dataType == f.dataType,
-          s"incompatible batch schema rejected at commit: ${f.name} is " +
-            s"${prev.dataType.simpleString} in $table but " +
-            s"${f.dataType.simpleString} in the new batch — schema evolution " +
-            "supports ADDING columns only")
+  /** Union schema of `batches`, plus the `adding` batch [[commit]]
+    * validates, per the table's evolution contract: ADDING columns is
+    * supported (old rows read the new column as null); changing a column's
+    * type fails naming both batches — at commit, the offending write (the
+    * Iceberg model). Resolved from manifests alone, never from data-file
+    * footers (the parquet `mergeSchema` option reads EVERY footer, a job
+    * of its own at 100 TB). */
+  private def unionSchema(table: String, batches: Seq[String],
+      adding: Option[(String, StructType)] = None): StructType = {
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, (String, StructField)]
+    (batches.map(b => b -> batchSchema(table, b)) ++ adding).foreach { case (b, schema) =>
+      schema.fields.foreach { f =>
+        fields.get(f.name) match {
+          case None => fields(f.name) = (b, f)
+          case Some((prevBatch, prev)) =>
+            require(prev.dataType == f.dataType,
+              s"schema evolution supports ADDING columns only: ${f.name} is " +
+                s"${prev.dataType.simpleString} in batch $prevBatch and " +
+                s"${f.dataType.simpleString} in batch $b of $table")
+        }
       }
     }
+    StructType(fields.values.map(_._2).toSeq)
   }
 
   /** The one read of committed data: `paths` (the batches' data dirs, or a
@@ -373,16 +284,15 @@ object TranscriptTable {
     var skipped = 0
     val kept = Seq.newBuilder[String]
     batches.foreach { b =>
-      val stats = fileStats(table, b)
-      val files = batchFiles(table, b)
-      total += files.length
-      files.foreach { f =>
+      val m = manifest(table, b)
+      total += m.files.length
+      m.files.foreach { f =>
         // both bounds null = no range predicate at all: every file is
         // kept, INCLUDING all-null/absent-column files — readRange's
         // predicate degenerates to keep-everything (null rows included),
         // so pruning on "a range can't match null" would drop their rows
         val keep = (loC == null && hiC == null) ||
-          (stats.get(f).flatMap(_.get(column)) match {
+          (m.fileStats.get(f).flatMap(_.get(column)) match {
             case Some(s) => FileStats.overlaps(s, loC, hiC)
             case None    => true // no bounds recorded for this file/column
           })
@@ -472,10 +382,11 @@ object TranscriptTable {
     writeData(layout(df), table, newBatchId)
     // carry the replaced row counts and lineage so manifest-only monitoring
     // stays exact: the rows are the same, so their lineage merges
-    val lineage = batchIds.flatMap(manifestValue(table, _, "lineage"))
+    val replaced = batchIds.map(manifest(table, _))
+    val lineage = replaced.flatMap(_.lineage)
     commit(table, newBatchId, df.schema, Map(
       "replaces" -> batchIds.sorted.mkString(","),
-      "n_turns" -> batchIds.map(nTurns(table, _)).sum.toString) ++
+      "n_turns" -> replaced.map(_.nTurns).sum.toString) ++
       (if (lineage.isEmpty) Map.empty else Map("lineage" -> Lineage.mergeEntries(lineage))) ++
       statsExtras(spark, table, newBatchId,
         (statsCols ++ inheritedStatsCols(table, batchIds)).distinct))
@@ -611,9 +522,9 @@ object TranscriptTable {
           a < sorted.length && FileStats.cmpKey(sorted(a), hi) <= 0
         }
         live.filter { b =>
-          val stats = fileStats(table, b)
-          batchFiles(table, b).exists { f =>
-            stats.get(f).flatMap(_.get(keyCol)) match {
+          val m = manifest(table, b)
+          m.files.exists { f =>
+            m.fileStats.get(f).flatMap(_.get(keyCol)) match {
               case Some(s) if s.kind == "null" || s.kind == "absent" => false
               case Some(s) => anyIn(s.min, s.max)
               case None    => true // no bounds recorded: never prune blind
@@ -711,17 +622,14 @@ object TranscriptTable {
     * read). A compaction batch carries the merge of the batches it
     * replaced; row-changing rewrites carry none. */
   def readLineage(spark: SparkSession, table: String): DataFrame = {
-    val entries = liveBatches(table).flatMap(b => manifestValue(table, b, "lineage").map(b -> _))
+    val entries = liveBatches(table).flatMap(b => manifest(table, b).lineage.map(b -> _))
     require(entries.nonEmpty, s"no lineage in $table")
     spark.createDataFrame(entries.flatMap { case (b, e) => Lineage.rows(b, e) })
   }
-
-  private def nTurns(table: String, batchId: String): Long =
-    manifestValue(table, batchId, "n_turns").fold(0L)(_.toLong)
 
   /** Row count from manifests alone — no data scan (monitoring at scale).
     * Counts LIVE batches only: a compaction manifest carries the sum of its
     * replaced batches, so the total is stable across maintenance. */
   def committedRowCount(table: String): Long =
-    liveBatches(table).map(nTurns(table, _)).sum
+    liveBatches(table).map(manifest(table, _).nTurns).sum
 }

@@ -170,6 +170,24 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     Seq(src, out).foreach(rmrf)
   }
 
+  test("every manifest file is the exact render of its parsed record") {
+    // pins the on-disk layout: the bytes a run writes are what Manifest
+    // renders, so readers that match the text (perfbench's lineage digest)
+    // and the record agree
+    val out = "/tmp/graft_manifest_golden"
+    rmrf(out)
+    ExtractJob.run(spark, Synth.turns(spark, 0.001, 4), out, nBatches = 4, saltPartitions = 8)
+    val batches = TranscriptTable.committedBatches(out)
+    assert(batches == Seq("b000", "b001", "b002", "b003"))
+    batches.foreach { b =>
+      val bytes = Files.readAllBytes(TranscriptTable.manifestDir(out).resolve(s"manifest-$b.json"))
+      val m = graft.table.Manifest.parse(new String(bytes, "UTF-8"))
+      assert(m.batchId == b && Seq("lineage", "n_turns", "schema").forall(m.entries.contains), b)
+      assert(java.util.Arrays.equals(m.render.getBytes("UTF-8"), bytes), s"manifest of $b")
+    }
+    rmrf(out)
+  }
+
   test("resume rewrites only the pending batches' directories") {
     val out = "/tmp/graft_resume_partitions"
     rmrf(out)
