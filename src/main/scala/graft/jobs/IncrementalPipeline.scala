@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.ops.{AnnIndex, Dedup}
+import graft.ops.{Dedup, StoreMeta}
 import graft.table.TranscriptTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ object IncrementalPipeline {
       else newDocs.select("doc_id", "text").limit(0)
     // warm path: the store is fresh exactly when its token matches the
     // CURRENT table listing (re-pinned by the previous tick's step 4)
-    val corpusToken = if (hasCorpus) AnnIndex.inputToken(corpus) else None
+    val corpusToken = if (hasCorpus) StoreMeta.inputToken(corpus) else None
     val sigs =
       if (hasCorpus && Dedup.signatureStoreFresh(spark, sigDir, corpusToken))
         Some(Dedup.readSignatureStore(spark, sigDir).localCheckpoint())
@@ -74,7 +74,7 @@ object IncrementalPipeline {
     // listing, so skipping the re-pin would force the next tick cold for
     // nothing (review finding) — an empty append is a metadata write.
     val committed = TranscriptTable.read(spark, table)
-    val newToken = AnnIndex.inputToken(committed)
+    val newToken = StoreMeta.inputToken(committed)
     if (sigs.isDefined)
       Dedup.appendSignatureStore(survivors.select("doc_id", "text"), sigDir,
         newToken)

@@ -24,47 +24,44 @@ import org.apache.spark.sql.types._
   *
   * Layout:
   *   dir/srp_bucket=<b>/...parquet   (LSH)   or   dir/ivf_cell=<c>/...
-  *   dir/_graft_meta/meta.properties kind, param, token, n_rows, and (IVF)
-  *                                   the KB-sized centroid table — all
-  *                                   control-plane state is one driver-side
-  *                                   file read, zero Spark jobs
-  * The underscore-prefixed dir is invisible to the data read. */
+  *   dir/_graft_meta/meta.properties the [[StoreMeta]] sidecar: kind, param,
+  *                                   token, n_rows and (IVF) the KB-sized
+  *                                   centroid table — all control-plane
+  *                                   state is one driver-side file read,
+  *                                   zero Spark jobs */
 object AnnIndex {
 
-  /** Cheap input version token: a fold over the source files' (path, length,
-    * modificationTime). One filesystem NAMESPACE listing — no data is read
-    * and no Spark job runs, so a fresh `build*` call is O(#files) driver-side
-    * RPCs, not a table scan. Inputs with no files (in-memory DataFrames)
-    * yield None: no provable version, so the build always runs for them.
-    * An Iceberg-style table would supply its snapshot id here instead. */
-  private[graft] def inputToken(embeddings: DataFrame): Option[Long] = {
-    val files = embeddings.inputFiles
-    if (files.isEmpty) return None
-    val conf = embeddings.sparkSession.sparkContext.hadoopConfiguration
-    var h = 0xcbf29ce484222325L
-    def fold(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    files.sorted.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      var i = 0
-      while (i < f.length) { fold(f.charAt(i).toLong); i += 1 }
-      fold(st.getLen); fold(st.getModificationTime)
-    }
-    Some(h)
+  /** An index's committed meta, typed: the [[StoreMeta]] entries with the
+    * geometry (centroids, PQ codebooks) and append batches parsed. */
+  private final case class Meta(kind: String, param: Int, token: Long,
+      nRows: Long, centroids: Array[Array[Double]] = Array.empty,
+      batches: Seq[String] = Seq.empty, pq: Option[Pq.PqModel] = None) {
+    def store: StoreMeta = StoreMeta.of(
+      Seq("kind" -> kind, "param" -> param, "token" -> token, "n_rows" -> nRows) ++
+        (if (centroids.isEmpty) Nil
+         else Seq("centroids" -> centroids.map(_.mkString(",")).mkString(";"))) ++
+        (if (batches.isEmpty) Nil else Seq("batches" -> batches.mkString(","))) ++
+        // bounded by the committed model (m*k*dsub), never by the data
+        pq.toSeq.flatMap(p => Seq("pq_m" -> p.m, "pq_dsub" -> p.dsub,
+          "pq_cb" -> p.codebooks.map(_.map(_.mkString(",")).mkString(";")).mkString("|"))): _*)
   }
 
-  private final case class Meta(kind: String, param: Int, token: Long,
-      nRows: Long, centroids: Array[Array[Double]],
-      batches: Seq[String] = Seq.empty, pq: Option[Pq.PqModel] = None)
-
-  private def upToDate(spark: SparkSession, dir: String, kind: String,
-      param: Int, token: Option[Long]): Boolean =
-    token.exists { t =>
-      try {
-        val m = readMeta(spark, dir)
-        m.kind == kind && m.param == param && m.token == t
-      } catch { case _: Exception => false }
+  private object Meta {
+    def from(m: StoreMeta): Meta = {
+      def doubles(s: String) = s.split(',').map(java.lang.Double.parseDouble)
+      Meta(m("kind"), m("param").toInt, m("token").toLong, m("n_rows").toLong,
+        m.get("centroids").filter(_.nonEmpty)
+          .fold(Array.empty[Array[Double]])(_.split(';').map(doubles)),
+        m.get("batches").fold(Seq.empty[String])(_.split(',').toSeq.filter(_.nonEmpty)),
+        m.get("pq_cb").filter(_.nonEmpty).map(cb => Pq.PqModel(m("pq_m").toInt,
+          m("pq_dsub").toInt, cb.split('|').map(_.split(';').map(doubles)))))
     }
+  }
+
+  /** The committed meta of an index of one of `kinds` (the [[StoreMeta]]
+    * kind guard: anything else throws). */
+  private def readMeta(spark: SparkSession, dir: String, kinds: String*): Meta =
+    Meta.from(StoreMeta.expect(spark, dir, kinds: _*))
 
   /** Smallest Hamming radius whose probed buckets are expected to hold
     * >= 6k candidates, under a uniform-bucket estimate from the committed
@@ -108,7 +105,66 @@ object AnnIndex {
       StructField("vec_id", LongType), StructField(bucketCol, IntegerType),
       StructField("cosine", DoubleType))))
 
+  /** Cluster the placed rows by their partition column (+ a bounded salt)
+    * and write them partitioned by it: unclustered, every task emits a file
+    * per bucket it sees (tasks x buckets tiny files); clustered, each
+    * bucket writes at most `filesPerBucket` files, over a data-derived
+    * task count ([[writeTasks]]). */
+  private def writePlaced(placed: DataFrame, partCol: String, nRows: Long,
+      nBuckets: Int, filesPerBucket: Int, mode: SaveMode, path: String): Unit =
+    placed
+      .repartition(writeTasks(placed.sparkSession, nRows, nBuckets, filesPerBucket),
+        col(partCol), pmod(xxhash64(col("vec_id")), lit(filesPerBucket)))
+      .write.mode(mode).partitionBy(partCol).parquet(path)
+
+  /** The one append protocol of [[appendLsh]], [[appendIvf]] and
+    * [[appendIvfPq]]. `place` checks the committed geometry and returns the
+    * batch with its partition column assigned from it (lazily: no job).
+    *
+    * Without a `batchId` (direct mode) the batch is an O(batch) parquet
+    * Append into the base bucket partitions. It is NOT replay-safe (the
+    * Append is visible at once), so the meta is invalidated BEFORE it: a
+    * crash between the data append and the final meta write must not leave
+    * meta.token equal to the base token, or a later build over the
+    * original source would short-circuit on freshness and serve the
+    * half-appended index as "the fresh index of frame X". The in-progress
+    * token differs from both the base and the final token, so any crash
+    * window degrades to a rebuild — never a stale reuse.
+    *
+    * With a `batchId` (exactly-once, the TranscriptTable pattern) the
+    * batch is STAGED under its own `append=<id>` prefix — invisible,
+    * because probes read only batch dirs listed in the committed meta —
+    * and becomes visible atomically with the final meta. A crash in
+    * between leaves an orphan staging dir that the replay Overwrites
+    * before committing; a replay after commit no-ops on the id check. */
+  private def append(newVecs: DataFrame, dir: String, kind: String,
+      filesPerBucket: Int, batchId: String)(place: Meta => DataFrame): Unit = {
+    val spark = newVecs.sparkSession
+    val meta = readMeta(spark, dir, kind)
+    val placed = place(meta)
+    if (batchId != null && meta.batches.contains(batchId)) return // replayed
+    val n = newVecs.count()
+    if (n == 0) return
+    val (partCol, nBuckets) =
+      if (kind == "lsh") ("srp_bucket", 1 << meta.param) else ("ivf_cell", meta.param)
+    if (batchId == null) {
+      StoreMeta.write(spark, dir, meta.copy(token = inProgressToken(meta.token)).store)
+      writePlaced(placed, partCol, n, nBuckets, filesPerBucket, SaveMode.Append, dir)
+    } else {
+      requireValidBatchId(batchId)
+      writePlaced(placed, partCol, n, nBuckets, filesPerBucket, SaveMode.Overwrite,
+        s"$dir/append=$batchId")
+    }
+    StoreMeta.write(spark, dir, meta.copy(
+      token = appendToken(meta.token, newVecs, n, batchId),
+      nRows = meta.nRows + n,
+      batches = if (batchId == null) meta.batches else meta.batches :+ batchId).store)
+  }
+
   // ------------------------------------------------------------------- LSH
+  private def lshPlaced(df: DataFrame, nBits: Int): DataFrame =
+    df.withColumn("srp_bucket", Similarity.srpBucketUdf(nBits)(col("embedding")))
+
   /** Build-once: an index whose committed meta matches (kind, param, input
     * token) is reused without running any Spark job. Pass `rebuild = true`
     * to force. Single-writer per dir assumed (concurrent builders of the
@@ -121,23 +177,14 @@ object AnnIndex {
   def buildLsh(embeddings: DataFrame, dir: String, nBits: Int = 8,
       rebuild: Boolean = false, filesPerBucket: Int = 1): Unit = {
     val spark = embeddings.sparkSession
-    val token = inputToken(embeddings)
-    if (!rebuild && upToDate(spark, dir, "lsh", nBits, token)) return
+    val token = StoreMeta.inputToken(embeddings)
+    if (!rebuild && StoreMeta.fresh(spark, dir, "lsh", token,
+        _("param") == nBits.toString)) return
     val nRows = embeddings.count() // build-time only; parquet footer metadata
     if (nRows > 0)
-      embeddings
-        .withColumn("srp_bucket", Similarity.srpBucketUdf(nBits)(col("embedding")))
-        // cluster by the partition key (+ a bounded salt) before partitionBy:
-        // unclustered, every task emits a file per bucket it sees (tasks x
-        // 2^nBits tiny files); clustered, each bucket writes exactly
-        // filesPerBucket files, over a data-derived task count (writeTasks)
-        .repartition(writeTasks(spark, nRows, 1 << nBits, filesPerBucket),
-          col("srp_bucket"), pmod(xxhash64(col("vec_id")), lit(filesPerBucket)))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("srp_bucket")
-        .parquet(dir)
-    writeMeta(spark, dir, kind = "lsh", param = nBits,
-      token = token.getOrElse(0L), nRows = nRows)
+      writePlaced(lshPlaced(embeddings, nBits), "srp_bucket", nRows, 1 << nBits,
+        filesPerBucket, SaveMode.Overwrite, dir)
+    StoreMeta.write(spark, dir, Meta("lsh", nBits, token.getOrElse(0L), nRows).store)
   }
 
   /** Append a batch to a persisted LSH index WITHOUT the O(corpus)
@@ -153,60 +200,18 @@ object AnnIndex {
     * single-source `buildLsh` no longer short-circuits (an appended index
     * is not "the index of frame X" — correct by construction).
     *
-    * `batchId` (exactly-once mode): the batch stages under its own
-    * `append=<id>` prefix, invisible until the meta commit lists it;
-    * replays of a committed id no-op — safe under an at-least-once
-    * upstream (Structured Streaming foreachBatch). Lifecycle: each
-    * committed batch adds one pruned probe source, so after many appends
-    * fold them back with `buildLsh(source, dir, rebuild = true)` in the
-    * maintenance window — a rebuild is crash-recoverable by rerun, which
-    * is why no bespoke in-place append-compaction exists. Single WRITER
-    * per dir assumed, like the builds: two concurrent appenders would
-    * race on the meta read-modify-write (a streaming query is naturally
-    * a single writer). */
+    * `batchId` (exactly-once mode, see [[append]]): replays of a committed
+    * id no-op — safe under an at-least-once upstream (Structured Streaming
+    * foreachBatch). Lifecycle: each committed batch adds one pruned probe
+    * source, so after many appends fold them back with
+    * `buildLsh(source, dir, rebuild = true)` in the maintenance window — a
+    * rebuild is crash-recoverable by rerun, which is why no bespoke
+    * in-place append-compaction exists. Single WRITER per dir assumed,
+    * like the builds: two concurrent appenders would race on the meta
+    * read-modify-write (a streaming query is naturally a single writer). */
   def appendLsh(newVecs: DataFrame, dir: String, filesPerBucket: Int = 1,
-      batchId: String = null): Unit = {
-    val spark = newVecs.sparkSession
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "lsh", s"$dir is a ${meta.kind} index, not lsh")
-    if (batchId != null && meta.batches.contains(batchId)) return // replayed
-    val n = newVecs.count()
-    if (n == 0) return
-    val bucketed = newVecs
-      .withColumn("srp_bucket", Similarity.srpBucketUdf(meta.param)(col("embedding")))
-      .repartition(writeTasks(spark, n, 1 << meta.param, filesPerBucket),
-        col("srp_bucket"), pmod(xxhash64(col("vec_id")), lit(filesPerBucket)))
-    if (batchId == null) {
-      // direct append: O(batch) write into the base bucket partitions.
-      // NOT replay-safe (parquet Append is immediately visible) — callers
-      // with an at-least-once upstream use the batchId form below.
-      // Invalidate the meta BEFORE the visible Append: a crash between the
-      // data append and the final meta write must not leave meta.token
-      // equal to the base token, or a later buildLsh over the original
-      // source would short-circuit via upToDate and serve the
-      // half-appended index as "the fresh index of frame X". The
-      // in-progress token differs from both the base and the final token,
-      // so any crash window degrades to a rebuild — never a stale reuse.
-      writeMeta(spark, dir, kind = "lsh", param = meta.param,
-        token = inProgressToken(meta.token), nRows = meta.nRows,
-        batches = meta.batches)
-      bucketed.write.mode(SaveMode.Append).partitionBy("srp_bucket").parquet(dir)
-    } else {
-      requireValidBatchId(batchId)
-      // exactly-once append (the TranscriptTable pattern): the batch is
-      // STAGED under its own append=<id> prefix — invisible, because the
-      // probe reads only batch dirs listed in the committed meta — and
-      // becomes visible atomically with the meta overwrite below. A crash
-      // in between leaves an orphan staging dir that the replay Overwrites
-      // before committing; a replay after commit no-ops on the id check.
-      bucketed.write.mode(SaveMode.Overwrite).partitionBy("srp_bucket")
-        .parquet(s"$dir/append=$batchId")
-    }
-    writeMeta(spark, dir, kind = "lsh", param = meta.param,
-      token = appendToken(meta.token, newVecs, n, batchId),
-      nRows = meta.nRows + n,
-      batches = if (batchId == null) meta.batches else meta.batches :+ batchId)
-  }
+      batchId: String = null): Unit =
+    append(newVecs, dir, "lsh", filesPerBucket, batchId)(m => lshPlaced(newVecs, m.param))
 
   /** Batch ids become a path segment AND a comma-joined, line-oriented
     * meta value — restrict to a charset that can corrupt neither (a
@@ -229,7 +234,7 @@ object AnnIndex {
     def fold(x: Long): Unit = { t ^= x; t *= 0x100000001b3L }
     fold(0x5bd1e995L) // unconditional marker: appended != freshly built
     fold(n)
-    inputToken(newVecs).foreach(fold)
+    StoreMeta.inputToken(newVecs).foreach(fold)
     if (batchId != null) fold(batchId.hashCode.toLong)
     t
   }
@@ -252,8 +257,7 @@ object AnnIndex {
     * k even on small tables. */
   def probeLsh(spark: SparkSession, dir: String, query: Array[Float], k: Int,
       probeHamming: Int = -1): DataFrame = {
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "lsh", s"$dir is a ${meta.kind} index, not lsh")
+    val meta = readMeta(spark, dir, "lsh")
     if (meta.nRows == 0L) return emptyProbe(spark, "srp_bucket")
     val nBits = meta.param
     val h = if (probeHamming >= 0) probeHamming
@@ -304,11 +308,19 @@ object AnnIndex {
   }
 
   // ------------------------------------------------------------------- IVF
+  private def ivfPlaced(df: DataFrame, centers: Array[Array[Double]]): DataFrame = {
+    val kern = new Similarity.CentroidKernel(centers)
+    val cellUdf = udf((v: Seq[Float]) => kern.nearest(v))
+    df.withColumn("ivf_cell", cellUdf(col("embedding")))
+  }
+
   def buildIvf(embeddings: DataFrame, dir: String, nCells: Int = 16,
       rebuild: Boolean = false, filesPerBucket: Int = 1): Unit = {
     val spark = embeddings.sparkSession
-    val token = inputToken(embeddings) // before the barrier — needs file lineage
-    if (!rebuild && upToDate(spark, dir, "ivf", nCells, token)) return
+    // before the barrier — needs file lineage
+    val token = StoreMeta.inputToken(embeddings)
+    if (!rebuild && StoreMeta.fresh(spark, dir, "ivf", token,
+        _("param") == nCells.toString)) return
     // barrier: count + trainer passes (init sample, and at large k the
     // KMeansDist count + 5 Lloyd's iterations) + the assignment write all
     // read this frame — without it every pass re-executes the upstream
@@ -323,19 +335,11 @@ object AnnIndex {
       // very large k the centroid table itself grows k*dim — it is the
       // model persisted in meta, so the bound is the model, not the data.
       centers = Similarity.trainCentroids(emb, nCells)
-      val kern = new Similarity.CentroidKernel(centers)
-      val cellUdf = udf((v: Seq[Float]) => kern.nearest(v))
-      emb
-        .withColumn("ivf_cell", cellUdf(col("embedding")))
-        .repartition(writeTasks(spark, nRows, nCells, filesPerBucket),
-          col("ivf_cell"),
-          pmod(xxhash64(col("vec_id")), lit(filesPerBucket))) // bounded files/cell
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("ivf_cell")
-        .parquet(dir)
+      writePlaced(ivfPlaced(emb, centers), "ivf_cell", nRows, nCells,
+        filesPerBucket, SaveMode.Overwrite, dir)
     }
-    writeMeta(spark, dir, kind = "ivf", param = nCells,
-      token = token.getOrElse(0L), nRows = nRows, centroids = centers)
+    StoreMeta.write(spark, dir,
+      Meta("ivf", nCells, token.getOrElse(0L), nRows, centroids = centers).store)
   }
 
   /** IVF twin of [[appendLsh]]: assign the new batch to cells with the
@@ -346,39 +350,11 @@ object AnnIndex {
     * probe equivalence with a rebuild-on-union-at-fixed-centroids is
     * pinned in AnnIndexSpec. */
   def appendIvf(newVecs: DataFrame, dir: String, filesPerBucket: Int = 1,
-      batchId: String = null): Unit = {
-    val spark = newVecs.sparkSession
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "ivf", s"$dir is a ${meta.kind} index, not ivf")
-    require(meta.centroids.nonEmpty, s"$dir has no committed centroids")
-    if (batchId != null && meta.batches.contains(batchId)) return // replayed
-    val n = newVecs.count()
-    if (n == 0) return
-    val kern = new Similarity.CentroidKernel(meta.centroids)
-    val cellUdf = udf((v: Seq[Float]) => kern.nearest(v))
-    val celled = newVecs
-      .withColumn("ivf_cell", cellUdf(col("embedding")))
-      .repartition(writeTasks(spark, n, meta.param, filesPerBucket),
-        col("ivf_cell"), pmod(xxhash64(col("vec_id")), lit(filesPerBucket)))
-    if (batchId == null) {
-      // same pre-append invalidation as appendLsh's direct mode: the crash
-      // window between Append visibility and the final meta must not leave
-      // the base token in place
-      writeMeta(spark, dir, kind = "ivf", param = meta.param,
-        token = inProgressToken(meta.token), nRows = meta.nRows,
-        centroids = meta.centroids, batches = meta.batches)
-      celled.write.mode(SaveMode.Append).partitionBy("ivf_cell").parquet(dir)
-    } else {
-      requireValidBatchId(batchId)
-      // exactly-once, same contract as appendLsh's batchId mode
-      celled.write.mode(SaveMode.Overwrite).partitionBy("ivf_cell")
-        .parquet(s"$dir/append=$batchId")
+      batchId: String = null): Unit =
+    append(newVecs, dir, "ivf", filesPerBucket, batchId) { m =>
+      require(m.centroids.nonEmpty, s"$dir has no committed centroids")
+      ivfPlaced(newVecs, m.centroids)
     }
-    writeMeta(spark, dir, kind = "ivf", param = meta.param,
-      token = appendToken(meta.token, newVecs, n, batchId),
-      nRows = meta.nRows + n, centroids = meta.centroids,
-      batches = if (batchId == null) meta.batches else meta.batches :+ batchId)
-  }
 
   /** Candidate margin for the adaptive IVF probe: probe enough cells that
     * the EXPECTED candidate count reaches `IvfCandidateMargin * k`. The
@@ -406,38 +382,13 @@ object AnnIndex {
     * row count (expected candidates >= [[IvfCandidateMargin]]·k). */
   def probeIvf(spark: SparkSession, dir: String, query: Array[Float], k: Int,
       nProbe: Int = -1): DataFrame = {
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "ivf", s"$dir is a ${meta.kind} index, not ivf")
+    val meta = readMeta(spark, dir, "ivf")
     if (meta.nRows == 0L) return emptyProbe(spark, "ivf_cell")
-    val nCells = meta.param
-    val np = if (nProbe > 0) nProbe
-             else adaptiveNProbe(nCells, meta.nRows, k)
-    val centers = meta.centroids
-    val qd = query.map(_.toDouble)
-    val probeCells = centers.indices.sortBy { c =>
-      var d = 0.0; var j = 0
-      while (j < qd.length) { val t = qd(j) - centers(c)(j); d += t * t; j += 1 }
-      d
-    }.take(np)
-    val wanted = probeCells.map(_.toString).toSet
-    // base cell dirs + each committed append batch's cell dirs (exactly-
-    // once appendIvf) — same source-union shape as probeLsh
-    val sources: Seq[(String, Seq[String])] =
-      (dir, listPartitionDirs(spark, dir, "ivf_cell=", wanted)) +:
-        meta.batches.map { b =>
-          val base = s"$dir/append=$b"
-          (base, listPartitionDirs(spark, base, "ivf_cell=", wanted))
-        }
-    val nonEmpty = sources.filter(_._2.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyProbe(spark, "ivf_cell")
+    val readProbed = probedReader(spark, dir, meta, query, k, nProbe)
+      .getOrElse(return emptyProbe(spark, "ivf_cell"))
     val q = query
     val cosUdf = udf((v: Seq[Float]) => Similarity.cosine(v, q.toSeq))
-    nonEmpty.map { case (base, probed) =>
-        spark.read.option("basePath", base).parquet(probed: _*)
-          .select(col("vec_id"), col("ivf_cell"), col("embedding"))
-      }
-      .reduce(_.unionByName(_))
-      .filter(col("ivf_cell").isin(probeCells: _*)) // belt over the path pruning
+    readProbed(Seq("vec_id", "ivf_cell", "embedding"))
       .withColumn("cosine", cosUdf(col("embedding")))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
@@ -467,24 +418,19 @@ object AnnIndex {
       m: Int = 8, kCodes: Int = 256, rebuild: Boolean = false,
       filesPerBucket: Int = 1): Unit = {
     val spark = embeddings.sparkSession
-    val token = inputToken(embeddings)
+    val token = StoreMeta.inputToken(embeddings)
     // freshness must also pin the PQ shape: same (kind, nCells, token) with
-    // a different (m, kCodes) is a DIFFERENT index
-    val fresh = !rebuild && token.exists { tk =>
-      try {
-        val mm = readMeta(spark, dir)
-        // compare against what THIS build would train, not the raw
-        // request: localKMeans caps codes at the sample size, so a
-        // corpus smaller than kCodes commits fewer codes — comparing
-        // p.k == kCodes would declare such an index permanently stale
-        // and re-run the full build on every call (a token match
-        // implies no appends, so mm.nRows is the build-time count)
+    // a different (m, kCodes) is a DIFFERENT index. Compare against what
+    // THIS build would train, not the raw request: localKMeans caps codes
+    // at the sample size, so a corpus smaller than kCodes commits fewer
+    // codes — comparing p.k == kCodes would declare such an index
+    // permanently stale and re-run the full build on every call (a token
+    // match implies no appends, so n_rows is the build-time count)
+    if (!rebuild && StoreMeta.fresh(spark, dir, "ivfpq", token, { s =>
+        val mm = Meta.from(s)
         val expectK = math.min(kCodes.toLong, math.max(1L, mm.nRows)).toInt
-        mm.kind == "ivfpq" && mm.param == nCells && mm.token == tk &&
-          mm.pq.exists(p => p.m == m && p.k == expectK)
-      } catch { case _: Exception => false }
-    }
-    if (fresh) return
+        mm.param == nCells && mm.pq.exists(p => p.m == m && p.k == expectK)
+      })) return
     val emb = embeddings.localCheckpoint() // count + 2 trainers + write
     val nRows = emb.count()
     var centers: Array[Array[Double]] = Array.empty
@@ -492,59 +438,23 @@ object AnnIndex {
     if (nRows > 0) {
       centers = Similarity.trainCentroids(emb, nCells)
       model = Some(Pq.train(emb, m = m, k = kCodes))
-      val cellKern = new Similarity.CentroidKernel(centers)
-      val codeKerns = model.get.codebooks.map(cb => new Similarity.CentroidKernel(cb))
-      val dsub = model.get.dsub
-      // ONE deserialization of the vector per row: cell + code together
-      val encUdf = udf { (v: Seq[Float]) =>
-        require(v.length == m * dsub, // the Pq.encode guard — never encode a prefix
-          s"embedding dim ${v.length} != trained dim ${m * dsub}")
-        val code = new Array[Byte](m)
-        var s = 0
-        while (s < m) {
-          val sub = new Array[Float](dsub)
-          var j = 0
-          while (j < dsub) { sub(j) = v(s * dsub + j); j += 1 }
-          code(s) = codeKerns(s).nearest(sub).toByte
-          s += 1
-        }
-        (cellKern.nearest(v), code)
-      }
-      emb
-        .withColumn("enc", encUdf(col("embedding")))
-        .select(col("vec_id"), col("embedding"),
-          col("enc._1").as("ivf_cell"), col("enc._2").as("pq_code"))
-        .repartition(writeTasks(spark, nRows, nCells, filesPerBucket),
-          col("ivf_cell"), pmod(xxhash64(col("vec_id")), lit(filesPerBucket)))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("ivf_cell")
-        .parquet(dir)
+      writePlaced(ivfPqPlaced(emb, centers, model.get), "ivf_cell", nRows,
+        nCells, filesPerBucket, SaveMode.Overwrite, dir)
     }
-    writeMeta(spark, dir, kind = "ivfpq", param = nCells,
-      token = token.getOrElse(0L), nRows = nRows, centroids = centers,
-      pq = model)
+    StoreMeta.write(spark, dir, Meta("ivfpq", nCells, token.getOrElse(0L), nRows,
+      centroids = centers, pq = model).store)
   }
 
-  /** Exactly-once / direct append at the COMMITTED geometry (cells and
-    * codebooks never move under append) — contracts identical to
-    * [[appendIvf]]. */
-  def appendIvfPq(newVecs: DataFrame, dir: String, filesPerBucket: Int = 1,
-      batchId: String = null): Unit = {
-    val spark = newVecs.sparkSession
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "ivfpq", s"$dir is a ${meta.kind} index, not ivfpq")
-    require(meta.centroids.nonEmpty && meta.pq.nonEmpty,
-      s"$dir has no committed geometry")
-    if (batchId != null && meta.batches.contains(batchId)) return // replayed
-    val n = newVecs.count()
-    if (n == 0) return
-    val model = meta.pq.get
-    val cellKern = new Similarity.CentroidKernel(meta.centroids)
+  /** Cell and PQ code of every vector at the given geometry, from ONE
+    * deserialization of the vector per row. */
+  private def ivfPqPlaced(df: DataFrame, centers: Array[Array[Double]],
+      model: Pq.PqModel): DataFrame = {
+    val cellKern = new Similarity.CentroidKernel(centers)
     val codeKerns = model.codebooks.map(cb => new Similarity.CentroidKernel(cb))
     val m = model.m; val dsub = model.dsub
     val encUdf = udf { (v: Seq[Float]) =>
-      require(v.length == m * dsub, // appended vectors must match the committed geometry
-        s"embedding dim ${v.length} != committed dim ${m * dsub}")
+      require(v.length == m * dsub, // the Pq.encode guard — never encode a prefix
+        s"embedding dim ${v.length} != index dim ${m * dsub}")
       val code = new Array[Byte](m)
       var s = 0
       while (s < m) {
@@ -556,28 +466,20 @@ object AnnIndex {
       }
       (cellKern.nearest(v), code)
     }
-    val celled = newVecs
-      .withColumn("enc", encUdf(col("embedding")))
+    df.withColumn("enc", encUdf(col("embedding")))
       .select(col("vec_id"), col("embedding"),
         col("enc._1").as("ivf_cell"), col("enc._2").as("pq_code"))
-      .repartition(writeTasks(spark, n, meta.param, filesPerBucket),
-        col("ivf_cell"), pmod(xxhash64(col("vec_id")), lit(filesPerBucket)))
-    if (batchId == null) {
-      writeMeta(spark, dir, kind = "ivfpq", param = meta.param,
-        token = inProgressToken(meta.token), nRows = meta.nRows,
-        centroids = meta.centroids, batches = meta.batches, pq = meta.pq)
-      celled.write.mode(SaveMode.Append).partitionBy("ivf_cell").parquet(dir)
-    } else {
-      requireValidBatchId(batchId)
-      celled.write.mode(SaveMode.Overwrite).partitionBy("ivf_cell")
-        .parquet(s"$dir/append=$batchId")
-    }
-    writeMeta(spark, dir, kind = "ivfpq", param = meta.param,
-      token = appendToken(meta.token, newVecs, n, batchId),
-      nRows = meta.nRows + n, centroids = meta.centroids,
-      batches = if (batchId == null) meta.batches else meta.batches :+ batchId,
-      pq = meta.pq)
   }
+
+  /** Exactly-once / direct append at the COMMITTED geometry (cells and
+    * codebooks never move under append) — contracts identical to
+    * [[appendIvf]]. */
+  def appendIvfPq(newVecs: DataFrame, dir: String, filesPerBucket: Int = 1,
+      batchId: String = null): Unit =
+    append(newVecs, dir, "ivfpq", filesPerBucket, batchId) { m =>
+      require(m.centroids.nonEmpty && m.pq.nonEmpty, s"$dir has no committed geometry")
+      ivfPqPlaced(newVecs, m.centroids, m.pq.get)
+    }
 
   /** The composed probe: (1) rank cells against the committed centroids
     * driver-side and take the adaptive nProbe; (2) ADC-scan ONLY the probed
@@ -592,8 +494,7 @@ object AnnIndex {
     * row-group stats can skip within them). */
   def probeIvfPq(spark: SparkSession, dir: String, query: Array[Float], k: Int,
       nProbe: Int = -1, refine: Int = 4): DataFrame = {
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "ivfpq", s"$dir is a ${meta.kind} index, not ivfpq")
+    val meta = readMeta(spark, dir, "ivfpq")
     if (meta.nRows == 0L) return emptyProbe(spark, "ivf_cell")
     val readProbed = probedReader(spark, dir, meta, query, k, nProbe)
       .getOrElse(return emptyProbe(spark, "ivf_cell"))
@@ -616,9 +517,10 @@ object AnnIndex {
       .select("vec_id", "ivf_cell", "cosine")
   }
 
-  /** The composed probe's pruned reader: centroid ranking driver-side, one
-    * namespace listing, a column-selected union over ONLY the probed cell
-    * dirs (base + committed append batches). None when nothing is probed. */
+  /** The IVF and IVF-PQ probes' pruned reader: centroid ranking
+    * driver-side, one namespace listing, a column-selected union over ONLY
+    * the probed cell dirs (base + committed append batches). None when
+    * nothing is probed. */
   private def probedReader(spark: SparkSession, dir: String, meta: Meta,
       query: Array[Float], k: Int,
       nProbe: Int): Option[Seq[String] => DataFrame] = {
@@ -656,8 +558,7 @@ object AnnIndex {
   private[graft] def ivfPqShortlistFrame(spark: SparkSession, dir: String,
       query: Array[Float], k: Int, nProbe: Int = -1,
       refine: Int = 4): DataFrame = {
-    val meta = readMeta(spark, dir)
-    require(meta.kind == "ivfpq", s"$dir is a ${meta.kind} index, not ivfpq")
+    val meta = readMeta(spark, dir, "ivfpq")
     // empty paths must carry the SHORTLIST schema (vec_id, adc_dist) —
     // the probe schema would break uniform callers on an empty index
     if (meta.nRows == 0L) return emptyShortlist(spark)
@@ -679,76 +580,8 @@ object AnnIndex {
     * and the bench's explicit-build step). Driver-side file read only. */
   def describe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = readMeta(spark, dir)
+    val m = readMeta(spark, dir, "lsh", "ivf", "ivfpq")
     Seq((m.kind, m.param, m.nRows, m.centroids.length))
       .toDF("kind", "param", "n_rows", "n_centroids")
-  }
-
-  // ------------------------------------------------------------------ meta
-  // Control-plane state lives in a plain key=value file written/read through
-  // the Hadoop FS API driver-side: probing or freshness-checking an index
-  // runs ZERO Spark jobs for its metadata (a parquet meta table would cost a
-  // job per read and re-enter the DataSource path for an underscore dir).
-  // Write is temp + one atomic overwrite-rename (FsAtomic): a reader racing
-  // the writer sees the old meta or the new meta, never a missing file.
-  // Single-writer per dir still assumed for the DATA (as stated on build*).
-  private def writeMeta(spark: SparkSession, dir: String, kind: String,
-      param: Int, token: Long, nRows: Long,
-      centroids: Array[Array[Double]] = Array.empty,
-      batches: Seq[String] = Seq.empty,
-      pq: Option[Pq.PqModel] = None): Unit = {
-    // Double.toString/parseDouble round-trips exactly, so centroid geometry
-    // survives the text encoding bit-for-bit
-    val cent = if (centroids.isEmpty) ""
-      else "centroids=" + centroids.map(_.mkString(",")).mkString(";") + "\n"
-    val bat = if (batches.isEmpty) ""
-      else "batches=" + batches.mkString(",") + "\n"
-    // PQ codebooks: subspaces '|', codes ';', dims ',' — same exact
-    // Double round-trip as the centroids; ~100 KB at m=16,k=64,dim=64,
-    // i.e. the committed model, bounded by (m*k*dsub), never by the data
-    val pqs = pq.map { p =>
-      s"pq_m=${p.m}\npq_dsub=${p.dsub}\npq_cb=" +
-        p.codebooks.map(_.map(_.mkString(",")).mkString(";")).mkString("|") +
-        "\n"
-    }.getOrElse("")
-    graft.util.FsAtomic.overwriteFile(spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties"),
-      (s"kind=$kind\nparam=$param\ntoken=$token\nn_rows=$nRows\n" + cent +
-        bat + pqs)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Meta = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties")
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
-    val kv = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.filter(_.contains('='))
-      .map { l => val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1)) }
-      .toMap
-    val centroids = kv.get("centroids") match {
-      case Some(s) if s.nonEmpty =>
-        s.split(';').map(_.split(',').map(java.lang.Double.parseDouble))
-      case _ => Array.empty[Array[Double]]
-    }
-    val batches = kv.get("batches") match {
-      case Some(s) if s.nonEmpty => s.split(',').toSeq.filter(_.nonEmpty)
-      case _ => Seq.empty[String]
-    }
-    val pq = kv.get("pq_cb").filter(_.nonEmpty).map { s =>
-      Pq.PqModel(kv("pq_m").toInt, kv("pq_dsub").toInt,
-        s.split('|').map(_.split(';').map(_.split(',')
-          .map(java.lang.Double.parseDouble))))
-    }
-    Meta(kv("kind"), kv("param").toInt, kv("token").toLong,
-      kv("n_rows").toLong, centroids, batches, pq)
   }
 }

@@ -197,7 +197,7 @@ object AsOfJoin {
     * JVM it is mostly probe-plan codegen), and an ongoing pipeline
     * re-joins the SAME file-backed inputs every run, so the decision is
     * memoized per (left-token, right-token, keys, threshold) using the
-    * AnnIndex metadata-only freshness token (input file listing — no data
+    * metadata-only [[StoreMeta.inputToken]] (input file listing — no data
     * scan). In-memory frames have no provable version (token None) and
     * always re-probe. The cache is also PERSISTED (tiny properties file
     * in java.io.tmpdir, best-effort) so repeat runs in fresh JVMs —
@@ -337,8 +337,8 @@ object AsOfJoin {
       case None =>
         loadPersistedRoutes()
         val cacheKey = for {
-          lt <- AnnIndex.inputToken(left)
-          rt <- AnnIndex.inputToken(right)
+          lt <- StoreMeta.inputToken(left)
+          rt <- StoreMeta.inputToken(right)
         } yield (lt, rt, keys, hotKeyShare)
         cacheKey.flatMap(k => Option(routeCache.get(k))) match {
           case Some(cached) =>

@@ -94,46 +94,11 @@ object BloomDedup {
     true
   }
 
-  private def metaPath(dir: String) = s"$dir/_graft_meta/meta.properties"
-
-  private def writeMeta(spark: SparkSession, dir: String, k: Int, shards: Int,
-      bytesPerShard: Int, nKeys: Long, token: Long,
-      designBpk: Option[Int] = None): Unit =
-    graft.util.FsAtomic.overwriteFile(spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(metaPath(dir)),
-      (s"kind=bloom\nk=$k\nshards=$shards\nbytes_per_shard=$bytesPerShard\n" +
-        s"n_keys=$nKeys\ntoken=$token\n" +
-        designBpk.map(d => s"design_bpk=$d\n").getOrElse(""))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private[ops] def readMeta(spark: SparkSession, dir: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.linesIterator.filter(_.contains('='))
-      .map { l => val Array(a, b) = l.split("=", 2); a -> b }.toMap
-  }
-
-  private def fresh(spark: SparkSession, dir: String, token: Option[Long]): Boolean =
-    token.exists { t =>
-      // kind-guarded like the other stores: a mis-pointed bloomDir whose
-      // token happens to match must read stale, never fresh. One meta
-      // read, both keys tested on it (r7 advice: the double readMeta made
-      // two filesystem round-trips per tick freshness check).
-      try {
-        val m = readMeta(spark, dir)
-        m.get("token").contains(t.toString) && m.get("kind").contains("bloom")
-      } catch { case _: Exception => false }
-    }
-
   /** True when the committed filter covers exactly the corpus with this
-    * freshness token — the signatureStoreFresh convention: warm callers
-    * gate on it, a stale token degrades to the direct path, never to a
-    * wrong answer. */
+    * freshness token ([[StoreMeta.fresh]]): warm callers gate on it, a
+    * stale token degrades to the direct path, never to a wrong answer. */
   def bloomFresh(spark: SparkSession, dir: String, token: Option[Long]): Boolean =
-    fresh(spark, dir, token)
+    StoreMeta.fresh(spark, dir, "bloom", token)
 
   // null-safe: a null text row has a null md5 and NO key — it can never
   // match anything (SQL join keys never equal null), so key extraction
@@ -160,8 +125,8 @@ object BloomDedup {
       nHashes: Int = 7, shards: Int = 64, textCol: String = "text",
       rebuild: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    val token = AnnIndex.inputToken(corpus)
-    if (!rebuild && fresh(spark, dir, token)) return
+    val token = StoreMeta.inputToken(corpus)
+    if (!rebuild && bloomFresh(spark, dir, token)) return
     // barrier: the store write, count, and filter build all read the keys
     val keys = keyed(corpus, textCol, shards).localCheckpoint()
     val nKeys = keys.count()
@@ -186,8 +151,9 @@ object BloomDedup {
       }.toDF("shard", "bits")
     filters.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/filters")
-    writeMeta(spark, dir, nHashes, shards, bytesPerShard, nKeys,
-      token.getOrElse(0L), designBpk = Some(bitsPerKey))
+    StoreMeta.write(spark, dir, StoreMeta.of("kind" -> "bloom", "k" -> nHashes,
+      "shards" -> shards, "bytes_per_shard" -> bytesPerShard, "n_keys" -> nKeys,
+      "token" -> token.getOrElse(0L), "design_bpk" -> bitsPerKey))
   }
 
   /** OR a new batch's keys into the committed filter and append them to
@@ -203,7 +169,7 @@ object BloomDedup {
       textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val meta = readMeta(spark, dir)
+    val meta = StoreMeta.expect(spark, dir, "bloom")
     val shards = meta("shards").toInt
     val kLocal = meta("k").toInt
     val bytesLocal = meta("bytes_per_shard").toInt
@@ -289,9 +255,8 @@ object BloomDedup {
             f"$d%d designed (n_keys=$nKeysNow%d) - fp rate is degrading, " +
             "rebuild with buildBloom(rebuild = true) in the next maintenance window")
     }
-    writeMeta(spark, dir, kLocal, shards, bytesLocal,
-      nKeysNow, newToken.getOrElse(0L),
-      designBpk = meta.get("design_bpk").map(_.toInt))
+    StoreMeta.write(spark, dir,
+      meta.updated("n_keys" -> nKeysNow, "token" -> newToken.getOrElse(0L)))
   }
 
   /** Filter load factor diagnostics: (n_keys, bits_per_key_now, the
@@ -299,7 +264,7 @@ object BloomDedup {
     * bits-per-key falls below their fp tolerance — degradation is a
     * number, never a surprise. */
   def bloomLoad(spark: SparkSession, dir: String): (Long, Double) = {
-    val meta = readMeta(spark, dir)
+    val meta = StoreMeta.expect(spark, dir, "bloom")
     val mTotal = meta("bytes_per_shard").toLong * 8 * meta("shards").toLong
     val n = meta("n_keys").toLong
     (n, if (n == 0) Double.PositiveInfinity else mTotal.toDouble / n)
@@ -310,7 +275,7 @@ object BloomDedup {
   def mightContain(batch: DataFrame, dir: String, textCol: String = "text",
       hitCol: String = "bloom_hit"): DataFrame = {
     val spark = batch.sparkSession
-    val meta = readMeta(spark, dir)
+    val meta = StoreMeta.expect(spark, dir, "bloom")
     val kLocal = meta("k").toInt
     val shards = meta("shards").toInt
     import spark.implicits._
@@ -352,7 +317,7 @@ object BloomDedup {
       broadcastMaxBytes: Long = 256L << 20,
       routeHint: Option[String] = None): DataFrame = {
     val spark = batch.sparkSession
-    val meta = readMeta(spark, dir)
+    val meta = StoreMeta.expect(spark, dir, "bloom")
     val filterBytes = meta("bytes_per_shard").toLong * meta("shards").toLong
     val route = routeHint.getOrElse(
       if (filterBytes <= broadcastMaxBytes) "broadcast" else "cogroup")
@@ -372,7 +337,7 @@ object BloomDedup {
   def mightContainCogrouped(batch: DataFrame, dir: String,
       textCol: String = "text", hitCol: String = "bloom_hit"): DataFrame = {
     val spark = batch.sparkSession
-    val meta = readMeta(spark, dir)
+    val meta = StoreMeta.expect(spark, dir, "bloom")
     val kLocal = meta("k").toInt
     val shards = meta("shards").toInt
     import spark.implicits._
@@ -427,7 +392,7 @@ object BloomDedup {
       textCol: String = "text",
       routeHint: Option[String] = None): DataFrame = {
     val spark = batch.sparkSession
-    val meta = readMeta(spark, dir)
+    val meta = StoreMeta.expect(spark, dir, "bloom")
     val shards = meta("shards").toInt
     val flagged = mightContainAuto(batch, dir, textCol, "__hit",
       routeHint = routeHint).localCheckpoint()

@@ -168,38 +168,11 @@ object Bm25 {
     *    shares, so they simply land as more term-sorted files;
     *  - the corpus scalars (N, Σdl) accumulate ADDITIVELY in the store
     *    meta, so the warm query path reads them without any corpus-sized
-    *    scan (`topKStore` runs stats-injected `topKIndexed`). */
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession, dir: String,
-      token: Option[Long], nDocs: Long, sumDl: Long): Unit =
-    graft.util.FsAtomic.overwriteFile(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties"),
-      s"kind=bm25\ntoken=${token.getOrElse(0L)}\nn_docs=$nDocs\nsum_dl=$sumDl\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Map[String, String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(txt.linesIterator.filter(_.contains('='))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-        .toMap)
-    } catch { case _: Exception => None }
-  }
-
-  /** The kind guard keeps a postingsDir pointed at some OTHER store kind
-    * (whose token may legitimately match — every store in a tick re-pins
-    * to the same post-commit table token) from reading as fresh and then
-    * corrupting that store's meta. */
+    *    scan (`topKStore` runs stats-injected `topKIndexed`).
+    * The meta keys, freshness rule and kind guard are [[StoreMeta]]'s. */
   def postingsStoreFresh(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpusToken: Option[Long]): Boolean =
-    corpusToken.exists(t =>
-      readMeta(spark, dir).exists(m =>
-        m.get("kind").contains("bm25") && m.get("token").contains(t.toString)))
+    StoreMeta.fresh(spark, dir, "bm25", corpusToken)
 
   /** Postings-frame write fanout: ~2M occurrences per output file, capped
     * at the caller's bucket count and floored at one — a 2-doc tick batch
@@ -212,7 +185,7 @@ object Bm25 {
   def buildPostingsStore(docs: DataFrame, dir: String, nBuckets: Int = 32,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val token = AnnIndex.inputToken(docs)
+    val token = StoreMeta.inputToken(docs)
     if (postingsStoreFresh(spark, dir, token)) return
     val p = index(docs, idCol, textCol).localCheckpoint() // write + stats
     val (n, sumDl) = rawStats(p)
@@ -220,7 +193,8 @@ object Bm25 {
       .sortWithinPartitions("term", "doc_id")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/postings")
-    writeMeta(spark, dir, token, n, sumDl)
+    StoreMeta.write(spark, dir, StoreMeta.of("kind" -> "bm25",
+      "token" -> token.getOrElse(0L), "n_docs" -> n, "sum_dl" -> sumDl))
   }
 
   /** O(batch): the new batch's postings append as more term-sorted files;
@@ -231,10 +205,7 @@ object Bm25 {
       corpusToken: Option[Long], nBuckets: Int = 32,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
-    val old = readMeta(spark, dir)
-      .filter(_.get("kind").contains("bm25"))
-      .getOrElse(throw new IllegalStateException(
-        s"appendPostingsStore on an unbuilt or non-bm25 store: $dir"))
+    val old = StoreMeta.expect(spark, dir, "bm25")
     val p = index(newDocs, idCol, textCol).localCheckpoint()
     val (n, sumDl) = rawStats(p)
     if (n > 0)
@@ -243,8 +214,10 @@ object Bm25 {
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .parquet(s"$dir/postings")
     // an all-duplicate tick appends nothing but still re-pins the token
-    writeMeta(spark, dir, corpusToken,
-      old("n_docs").toLong + n, old("sum_dl").toLong + sumDl)
+    StoreMeta.write(spark, dir, old.updated(
+      "token" -> corpusToken.getOrElse(0L),
+      "n_docs" -> (old("n_docs").toLong + n),
+      "sum_dl" -> (old("sum_dl").toLong + sumDl)))
   }
 
   /** (postings, stats) — the warm query inputs: the postings scan (pruned
@@ -252,10 +225,7 @@ object Bm25 {
     * meta-carried corpus scalars. Zero corpus-sized work. */
   def readPostingsStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, (Long, Double)) = {
-    val meta = readMeta(spark, dir)
-      .filter(_.get("kind").contains("bm25"))
-      .getOrElse(throw new IllegalStateException(
-        s"no bm25 postings store at $dir"))
+    val meta = StoreMeta.expect(spark, dir, "bm25")
     val n = meta("n_docs").toLong
     (spark.read.parquet(s"$dir/postings"),
       (n, if (n == 0) 0.0 else meta("sum_dl").toLong.toDouble / n))

@@ -196,15 +196,15 @@ object Bpe {
     catch { case _: java.io.IOException => Map.empty }
 
   /** Train-once-per-input: load the persisted model when its committed
-    * header matches the input's metadata-only freshness token (same scheme
-    * as AnnIndex — file listing path/length/mtime, NO data scan) and the
-    * trainer params; otherwise run the distributed training pass and
-    * persist. A repeat call on an unchanged input runs ZERO Spark jobs —
+    * header matches the input's metadata-only freshness token
+    * ([[StoreMeta.inputToken]] — file listing path/length/mtime, NO data
+    * scan) and the trainer params; otherwise run the distributed training
+    * pass and persist. A repeat call on an unchanged input runs ZERO Spark jobs —
     * the tokenizer behaves like the build artifact it is. */
   def trainCached(docs: DataFrame, path: String, textCol: String = "text",
       nMerges: Int = 512, maxWordTypes: Int = 100000): Model = {
     val spark = docs.sparkSession
-    val token = AnnIndex.inputToken(docs)
+    val token = StoreMeta.inputToken(docs)
     val want = token.map(t => Map(
       "token" -> t.toString, "nMerges" -> nMerges.toString,
       "maxWordTypes" -> maxWordTypes.toString, "textCol" -> textCol))

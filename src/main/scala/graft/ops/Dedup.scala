@@ -386,7 +386,7 @@ object Dedup {
     minhashCappedBuckets(corpus, maxBucket, textCol)
 
   /** Persisted MinHash signature store: (doc_id, sig) parquet + a
-    * metadata-only freshness token (AnnIndex scheme — input file listing,
+    * metadata-only freshness token ([[StoreMeta]] — input file listing,
     * no data scan). Build is a one-pass map + write; a repeat call on an
     * unchanged corpus runs ZERO Spark jobs. The signature pass is the
     * expensive half of near-dedup, and it depends only on the corpus —
@@ -395,15 +395,13 @@ object Dedup {
   def buildSignatureStore(docs: DataFrame, dir: String,
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val token = AnnIndex.inputToken(docs)
+    val token = StoreMeta.inputToken(docs)
     if (signatureStoreFresh(spark, dir, token)) return
     docs.select(col("doc_id"), minhashUdf(col(textCol)).as("sig"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/sigs")
-    graft.util.FsAtomic.overwriteFile(spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties"),
-      s"kind=minhash\ntoken=${token.getOrElse(0L)}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    StoreMeta.write(spark, dir,
+      StoreMeta.of("kind" -> "minhash", "token" -> token.getOrElse(0L)))
   }
 
   def readSignatureStore(spark: org.apache.spark.sql.SparkSession,
@@ -415,40 +413,25 @@ object Dedup {
     * the store-maintenance step of an ongoing pipeline's batch tick.
     * `corpusToken` is the freshness token of the corpus AS OF after this
     * batch (the caller commits the batch to its table first, then passes
-    * `AnnIndex.inputToken(table read)`), so the next tick's freshness
+    * `StoreMeta.inputToken(table read)`), so the next tick's freshness
     * check matches exactly when the corpus hasn't moved otherwise.
-    * Single writer per dir assumed, like the build. */
+    * Single writer per dir assumed, like the build; a dir holding no
+    * signature store throws before anything is written ([[StoreMeta]]). */
   def appendSignatureStore(newDocs: DataFrame, dir: String,
       corpusToken: Option[Long], textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
+    val meta = StoreMeta.expect(spark, dir, "minhash")
     newDocs.select(col("doc_id"), minhashUdf(col(textCol)).as("sig"))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .parquet(s"$dir/sigs")
-    graft.util.FsAtomic.overwriteFile(spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties"),
-      s"kind=minhash\ntoken=${corpusToken.getOrElse(0L)}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    StoreMeta.write(spark, dir, meta.updated("token" -> corpusToken.getOrElse(0L)))
   }
 
   /** True when the store's committed token matches `corpusToken` — the
     * zero-job freshness check callers use to decide warm vs rebuild. */
   def signatureStoreFresh(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpusToken: Option[Long]): Boolean = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    corpusToken.exists { t =>
-      try {
-        val in = fs.open(metaPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        // kind-guarded: a mis-pointed sigDir must read stale, never
-        // append into / overwrite another store whose token matches
-        // (every store in a tick re-pins the same post-commit token)
-        txt.linesIterator.contains(s"token=$t") &&
-          txt.linesIterator.contains("kind=minhash")
-      } catch { case _: Exception => false }
-    }
-  }
+      dir: String, corpusToken: Option[Long]): Boolean =
+    StoreMeta.fresh(spark, dir, "minhash", corpusToken)
 
   // -------------------------------------------------------------- simhash
   /** 64-bit SimHash over token unigrams (token frequency weighted),

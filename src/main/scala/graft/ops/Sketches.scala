@@ -383,43 +383,21 @@ object Sketches {
     * sketches × m)), so maintenance is O(batch) with no read-modify-write.
     * Sketches never subtract: after a CoW delete/merge rewrites the table,
     * the input token moves and the next tick rebuilds (degrade-to-correct,
-    * the signature-store contract). */
+    * the signature-store contract). Meta, freshness and the kind guard on
+    * append are [[StoreMeta]]'s. */
   private def terms(docs: DataFrame, textCol: String): DataFrame =
     docs.select(
       explode(expr(s"filter(split(lower($textCol), '\\\\W+'), x -> x != '')"))
         .as("term"))
 
-  private def writeMeta(docs: DataFrame, dir: String, token: Option[Long]): Unit =
-    graft.util.FsAtomic.overwriteFile(
-      docs.sparkSession.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties"),
-      s"kind=sketches\ntoken=${token.getOrElse(0L)}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
   def sketchStoreFresh(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpusToken: Option[Long]): Boolean = {
-    val metaPath =
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_meta/meta.properties")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    corpusToken.exists { t =>
-      try {
-        val in = fs.open(metaPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        // kind-guarded (the Bm25 store convention): every store in a tick
-        // re-pins the SAME post-commit token, so a sketchDir mis-pointed
-        // at another store's directory would otherwise read fresh and
-        // then append sketch parquet into it / overwrite its meta
-        txt.linesIterator.contains(s"token=$t") &&
-          txt.linesIterator.contains("kind=sketches")
-      } catch { case _: Exception => false }
-    }
-  }
+      dir: String, corpusToken: Option[Long]): Boolean =
+    StoreMeta.fresh(spark, dir, "sketches", corpusToken)
 
   def buildSketchStore(docs: DataFrame, dir: String,
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val token = AnnIndex.inputToken(docs)
+    val token = StoreMeta.inputToken(docs)
     if (sketchStoreFresh(spark, dir, token)) {
       // upgrade path: a store built before the dd leg existed is token-
       // fresh but has no dd/ — backfill it from the same corpus instead of
@@ -439,7 +417,8 @@ object Sketches {
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/cms")
     ddSketch(docLens(docs, textCol), "dl").write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/dd")
-    writeMeta(docs, dir, token)
+    StoreMeta.write(spark, dir,
+      StoreMeta.of("kind" -> "sketches", "token" -> token.getOrElse(0L)))
   }
 
   /** Per-doc token count — the sequence-length distribution the packing /
@@ -464,14 +443,15 @@ object Sketches {
   def appendSketchStore(newDocs: DataFrame, dir: String,
       corpusToken: Option[Long], textCol: String = "text",
       ddBackfill: Option[DataFrame] = None): Unit = {
+    val spark = newDocs.sparkSession
+    val meta = StoreMeta.expect(spark, dir, "sketches")
     val t = terms(newDocs, textCol).localCheckpoint()
     hllSketch(t, "term").write
       .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/hll")
     cmsSketch(t, "term").write
       .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/cms")
     val ddPath = new org.apache.hadoop.fs.Path(s"$dir/dd")
-    val fs = ddPath.getFileSystem(
-      newDocs.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = ddPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(ddPath))
       ddSketch(docLens(newDocs, textCol), "dl").write
         .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/dd")
@@ -479,7 +459,7 @@ object Sketches {
       ddSketch(docLens(corpus, textCol), "dl").write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/dd")
     }
-    writeMeta(newDocs, dir, corpusToken)
+    StoreMeta.write(spark, dir, meta.updated("token" -> corpusToken.getOrElse(0L)))
   }
 
   /** Merged doc-length quantile sketch — read-side counter sum over the

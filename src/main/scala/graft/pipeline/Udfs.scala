@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.blocks.Blockifier
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.udf
+import scala.util.control.NonFatal
 
 /** Column-level entry points for the extraction stages (SURVEY.md §3.2):
   * each stage individually testable; the fused `extract_turn` is the
@@ -23,15 +24,17 @@ object Udfs {
     try Blockifier.blockifyProduction(text).length
     catch { case _: graft.blocks.BlockifyError => 0 })
 
-  /** text -> main content only (classifier stage). */
+  /** text -> main content only (classifier stage). A row that fails to
+    * parse is a null cell; a fatal error (stack overflow, OOM) kills the
+    * task, not the row. */
   val extractContent = udf((text: String) =>
     try graft.model.NewsNet.predict(text).content.orNull
-    catch { case _: Throwable => null })
+    catch { case NonFatal(_) => null })
 
-  /** text -> rule-based metadata struct only. */
+  /** text -> rule-based metadata struct only (null cell as above). */
   val extractMeta = udf((text: String) =>
     try graft.meta.MetaExtract.extractMetadata(text)
-    catch { case _: Throwable => null })
+    catch { case NonFatal(_) => null })
 
   /** byline -> author names (CRF replacement). */
   val authorNames = udf((byline: String) => graft.meta.Authors.extract(byline))

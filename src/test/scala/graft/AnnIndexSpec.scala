@@ -247,16 +247,16 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
 
   test("direct-mode append crash window: failed append leaves no falsely-fresh meta") {
     // ADVICE r5: in direct mode the parquet Append is visible before the
-    // final meta write. appendLsh now commits an IN-PROGRESS token before
-    // the Append, so a crash in that window can never leave the base
-    // token in place — a later buildLsh over the original source must
-    // rebuild rather than short-circuit on a half-appended index.
+    // final meta write. The shared append protocol commits an IN-PROGRESS
+    // token before the Append, so a crash in that window can never leave
+    // the base token in place — a later build over the original source
+    // must rebuild rather than short-circuit on a half-appended index.
+    // Run for every index kind: LSH, IVF and IVF-PQ share the protocol.
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, udf}
     val src = s"$tmp/crash_src"
     emb.filter(col("vec_id") < 250).write.mode("overwrite").parquet(src)
     val half1 = spark.read.parquet(src)
-    val dir = s"$tmp/append_crash"
-    AnnIndex.buildLsh(half1, dir, nBits = 8)
     // a batch whose embedding column throws at EXECUTION time: count()
     // prunes the column (succeeds), the bucketing write fails mid-append —
     // exactly the crash window
@@ -264,23 +264,33 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
       { if (v != null) throw new RuntimeException("boom"); v })
     val bad = emb.filter(col("vec_id") >= 250)
       .withColumn("embedding", boom(col("embedding")))
-    intercept[Exception] { AnnIndex.appendLsh(bad, dir) }
-    // the meta must NOT read as fresh for the original source any more:
-    // a single-source rebuild check must run the build (jobs > 0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val (lsh, ivf, ivfpq) =
+      (s"$tmp/append_crash", s"$tmp/append_crash_ivf", s"$tmp/append_crash_ivfpq")
+    val kinds: Seq[(String, DataFrame => Unit, DataFrame => Unit)] = Seq(
+      (lsh, AnnIndex.buildLsh(_, lsh, nBits = 8), AnnIndex.appendLsh(_, lsh)),
+      (ivf, AnnIndex.buildIvf(_, ivf, nCells = 8), AnnIndex.appendIvf(_, ivf)),
+      (ivfpq, AnnIndex.buildIvfPq(_, ivfpq, nCells = 8, m = 16, kCodes = 64),
+        AnnIndex.appendIvfPq(_, ivfpq)))
+    for ((dir, build, appendTo) <- kinds) {
+      build(half1)
+      intercept[Exception] { appendTo(bad) }
+      // the meta must NOT read as fresh for the original source any more:
+      // a single-source rebuild check must run the build (jobs > 0)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        build(half1)
+        Thread.sleep(1000)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get() > 0,
+        s"build of $dir short-circuited on a mid-append index (crash window not invalidated)")
+      // and the rebuilt index serves exactly the source again
+      assert(spark.read.parquet(dir).count() == half1.count())
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      AnnIndex.buildLsh(half1, dir, nBits = 8)
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() > 0,
-      "buildLsh short-circuited on a mid-append index (crash window not invalidated)")
-    // and the rebuilt index serves exactly the source again
-    assert(spark.read.parquet(dir).count() == half1.count())
   }
 
   test("ivfpq: exhaustive probe with full refine equals brute force exactly") {

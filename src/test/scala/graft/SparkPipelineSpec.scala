@@ -54,6 +54,28 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(checked > 300)
   }
 
+  test("Udfs.register: the six SQL functions equal the direct Scala calls") {
+    val in = getClass.getResourceAsStream("/extractnet-fixtures/models_testing.html")
+    val html = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    graft.pipeline.Udfs.register(spark)
+    val sp = spark; import sp.implicits._
+    val byline = "By Jane Doe and John Smith, Staff Writers"
+    Seq((html, byline)).toDF("text", "byline").createOrReplaceTempView("udf_page")
+    def sql(expr: String) = spark.sql(s"SELECT $expr AS v FROM udf_page")
+    assert(sql("extract_turn(text)").select("v.*").as[graft.pipeline.Extracted].head() ==
+      Extract.extract(html))
+    val blocks = graft.blocks.Blockifier.blockifyProduction(html)
+    assert(sql("block_texts(text)").as[Seq[String]].head() == blocks.map(_.text))
+    assert(sql("block_count(text)").as[Int].head() == blocks.length)
+    val content = sql("extract_content(text)").as[String].head()
+    assert(content == graft.model.NewsNet.predict(html).content.orNull)
+    assert(content.startsWith("Making a photo slideshow with music"))
+    assert(sql("extract_meta(text)").select("v.*").as[graft.meta.Meta].head() ==
+      graft.meta.MetaExtract.extractMetadata(html))
+    val authors = sql("author_names(byline)").as[Seq[String]].head()
+    assert(authors == graft.meta.Authors.extract(byline) && authors.nonEmpty)
+  }
+
   test("job writes ordered, resumable, lineage-bearing table") {
     val out = "/tmp/graft_test_table"
     rmrf(out)
@@ -306,7 +328,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(after2 == Set(1000L, 1001L, 1002L, 1003L, 2002L), after2.toString)
     // the store was re-pinned by tick 2 -> tick 3 takes the WARM path
     assert(graft.ops.Dedup.signatureStoreFresh(spark, sigDir,
-      graft.ops.AnnIndex.inputToken(
+      graft.ops.StoreMeta.inputToken(
         TranscriptTable.read(spark, table).select("doc_id", "text"))),
       "store must be fresh for the next tick (warm path)")
     // replaying a committed tick is a no-op
@@ -342,7 +364,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
       docs((1000L, enText(1)), (1001L, enText(2)), (1002L, enText(3))),
       table, sigDir, "b001", bloomDir = bloomDir)
     // tick 1 built the filter over the committed table → tick 2 is warm
-    val tok1 = graft.ops.AnnIndex.inputToken(
+    val tok1 = graft.ops.StoreMeta.inputToken(
       TranscriptTable.read(spark, table).select("doc_id", "text"))
     assert(graft.ops.BloomDedup.bloomFresh(spark, bloomDir, tok1),
       "filter must be fresh for the next tick")
@@ -357,7 +379,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(after2 == Set(1000L, 1001L, 1002L, 2002L), after2.toString)
 
     // the filter was APPENDED (not rebuilt) and re-pinned to the new table
-    val tok2 = graft.ops.AnnIndex.inputToken(
+    val tok2 = graft.ops.StoreMeta.inputToken(
       TranscriptTable.read(spark, table).select("doc_id", "text"))
     assert(graft.ops.BloomDedup.bloomFresh(spark, bloomDir, tok2))
     val (nKeys, _) = graft.ops.BloomDedup.bloomLoad(spark, bloomDir)
@@ -400,7 +422,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     val hllFiles2 = new java.io.File(s"$sketchDir/hll")
       .listFiles.count(_.getName.endsWith(".parquet"))
     assert(hllFiles2 > hllFiles1, "tick 2 must append, not rebuild")
-    val tok = graft.ops.AnnIndex.inputToken(
+    val tok = graft.ops.StoreMeta.inputToken(
       TranscriptTable.read(spark, table).select("doc_id", "text"))
     assert(graft.ops.Sketches.sketchStoreFresh(spark, sketchDir, tok))
     // read-side merge == direct sketches over the final table

@@ -184,7 +184,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(graft.table.TranscriptTable.committedRowCount(table) == 5)
     // the store was re-pinned by the last data batch -> next tick is warm
     assert(graft.ops.Dedup.signatureStoreFresh(spark, sigDir,
-      graft.ops.AnnIndex.inputToken(
+      graft.ops.StoreMeta.inputToken(
         graft.table.TranscriptTable.read(spark, table).select("doc_id", "text"))),
       "store must be fresh after the streaming ticks")
     Seq(table, sigDir, ckpt).foreach(rmrf)
