@@ -155,63 +155,50 @@ object Bpe {
   }
 
   // ------------------------------------------------------------ persistence
-  /** Persist a trained model (one "left right" merge per line, rank order;
-    * leading `#key=value` header lines carry provenance) through the Hadoop
-    * FS with one atomic overwrite-rename. At scale the tokenizer is a BUILD
-    * ARTIFACT — trained once, loaded by every encode job — not a per-job
-    * computation. */
-  def save(spark: org.apache.spark.sql.SparkSession, model: Model,
-      path: String, header: Map[String, String] = Map.empty): Unit = {
-    val head = header.toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" }
+  /** Persist a trained model (one "left right" merge per line, rank order)
+    * through the Hadoop FS with one atomic overwrite-rename. At scale the
+    * tokenizer is a BUILD ARTIFACT — trained once, loaded by every encode
+    * job — not a per-job computation. */
+  def save(spark: org.apache.spark.sql.SparkSession, model: Model, path: String): Unit =
     graft.util.FsAtomic.overwriteFile(spark.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(path),
-      (head ++ model.merges.map { case (a, b) => s"$a $b" }).mkString("\n")
+      model.merges.map { case (a, b) => s"$a $b" }.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
 
-  private def readLines(spark: org.apache.spark.sql.SparkSession,
-      path: String): Iterator[String] = {
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    text.linesIterator
+    Model(text.linesIterator.filter(_.nonEmpty).map { l =>
+      val sp = l.indexOf(' ')
+      (l.substring(0, sp).toInt, l.substring(sp + 1).toInt)
+    }.toArray)
   }
 
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): Model =
-    Model(readLines(spark, path)
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
-        val sp = l.indexOf(' ')
-        (l.substring(0, sp).toInt, l.substring(sp + 1).toInt)
-      }.toArray)
-
-  /** The `#key=value` header of a saved model; empty if the file is absent
-    * (driver-side metadata read only — no Spark job). */
-  def readHeader(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[String, String] =
-    try readLines(spark, path).takeWhile(_.startsWith("#"))
-      .map { l => val i = l.indexOf('='); (l.substring(1, i), l.substring(i + 1)) }
-      .toMap
-    catch { case _: java.io.IOException => Map.empty }
-
-  /** Train-once-per-input: load the persisted model when its committed
-    * header matches the input's metadata-only freshness token
-    * ([[StoreMeta.inputToken]] — file listing path/length/mtime, NO data
-    * scan) and the trainer params; otherwise run the distributed training
-    * pass and persist. A repeat call on an unchanged input runs ZERO Spark jobs —
-    * the tokenizer behaves like the build artifact it is. */
-  def trainCached(docs: DataFrame, path: String, textCol: String = "text",
+  /** Train-once-per-input: the model is a [[StoreMeta]] store of kind
+    * `bpe` — `dir/model` plus the sidecar, whose keys are kind, token and
+    * the trainer params (nMerges, maxWordTypes, textCol). The store is
+    * fresh when the input's metadata-only token ([[StoreMeta.inputToken]]
+    * — file listing path/length/mtime, NO data scan) and the params match;
+    * then the model loads, otherwise the distributed training pass runs
+    * and the store is rewritten. A repeat call on an unchanged input runs
+    * ZERO Spark jobs — the tokenizer behaves like the build artifact it
+    * is. */
+  def trainCached(docs: DataFrame, dir: String, textCol: String = "text",
       nMerges: Int = 512, maxWordTypes: Int = 100000): Model = {
     val spark = docs.sparkSession
     val token = StoreMeta.inputToken(docs)
-    val want = token.map(t => Map(
-      "token" -> t.toString, "nMerges" -> nMerges.toString,
-      "maxWordTypes" -> maxWordTypes.toString, "textCol" -> textCol))
-    if (want.isDefined && readHeader(spark, path) == want.get)
+    val path = s"$dir/model"
+    val params = Seq("nMerges" -> nMerges.toString,
+      "maxWordTypes" -> maxWordTypes.toString, "textCol" -> textCol)
+    if (StoreMeta.fresh(spark, dir, "bpe", token,
+        m => params.forall { case (k, v) => m.get(k).contains(v) }))
       return load(spark, path)
     val model = train(docs, textCol, nMerges, maxWordTypes)
-    save(spark, model, path, want.getOrElse(Map.empty))
+    save(spark, model, path)
+    StoreMeta.write(spark, dir, StoreMeta.of(
+      Seq("kind" -> "bpe", "token" -> token.getOrElse(0L)) ++ params: _*))
     model
   }
 }

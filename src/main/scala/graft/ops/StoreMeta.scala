@@ -24,6 +24,7 @@ import scala.util.control.NonFatal
   *  - `bloom`    kind, k, shards, bytes_per_shard, n_keys, token, design_bpk
   *  - `sketches` kind, token                         ([[Sketches]] store)
   *  - `bm25`     kind, token, n_docs, sum_dl         ([[Bm25]] postings)
+  *  - `bpe`      kind, token, nMerges, maxWordTypes, textCol  ([[Bpe]] model)
   * `centroids` are `;`-separated rows of `,`-separated doubles, `pq_cb`
   * the same per subspace joined by `|` (Double.toString round-trips
   * exactly); `batches` lists committed exactly-once append ids. An input

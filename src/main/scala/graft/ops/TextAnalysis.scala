@@ -12,7 +12,7 @@ object TextAnalysis {
   private val Stopwords: Map[String, Set[String]] = Map(
     "en" -> Set("the", "and", "of", "to", "in", "is", "that", "for", "with", "was", "are", "this"),
     "fr" -> Set("le", "la", "les", "et", "des", "est", "dans", "que", "pour", "une", "qui", "sur"),
-    // byte-equal to the x_langid_pred DuckDB oracle sets (SparkEntry): the
+    // byte-equal to the x_langid_pred DuckDB oracle sets (QualityQueries): the
     // oracled Latin path has ASCII-contract semantics end to end (the \W+
     // tokenizer note below), so no non-ASCII stopwords ("für" would diverge
     // from the oracle on the first non-ASCII German doc)

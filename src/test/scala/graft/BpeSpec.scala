@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Bpe
+import graft.ops.{Bpe, StoreMeta}
 import org.scalatest.funsuite.AnyFunSuite
 
 class BpeSpec extends AnyFunSuite with SparkSuite {
@@ -71,9 +71,9 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
 
   test("trainCached: repeat call on unchanged input runs ZERO Spark jobs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = java.nio.file.Files.createTempDirectory("graft_bpe_c").toString + "/model.bpe"
+    val path = java.nio.file.Files.createTempDirectory("graft_bpe_c").toString + "/bpe"
     val m1 = Bpe.trainCached(docs, path, nMerges = 48) // cold: trains + saves
-    assert(Bpe.readHeader(spark, path).contains("token"))
+    assert(StoreMeta.read(spark, path).exists(_.get("token").isDefined))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -91,6 +91,6 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
     // changed trainer params -> header mismatch -> retrains
     val m3 = Bpe.trainCached(docs, path, nMerges = 32)
     assert(m3.merges.length <= 32)
-    assert(Bpe.readHeader(spark, path)("nMerges") == "32")
+    assert(StoreMeta.read(spark, path).flatMap(_.get("nMerges")).contains("32"))
   }
 }

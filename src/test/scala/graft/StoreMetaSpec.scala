@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{AnnIndex, BloomDedup, Bm25, Dedup, Sketches, StoreMeta}
+import graft.ops.{AnnIndex, BloomDedup, Bm25, Bpe, Dedup, Sketches, StoreMeta}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -36,7 +36,8 @@ class StoreMetaSpec extends AnyFunSuite with SparkSuite {
       "minhash" -> (Dedup.buildSignatureStore(d, _)),
       "bloom" -> (BloomDedup.buildBloom(d, _, shards = 4)),
       "sketches" -> (Sketches.buildSketchStore(d, _)),
-      "bm25" -> (Bm25.buildPostingsStore(d, _, nBuckets = 2)))
+      "bm25" -> (Bm25.buildPostingsStore(d, _, nBuckets = 2)),
+      "bpe" -> (Bpe.trainCached(d, _, nMerges = 8)))
     builds.map { case (kind, build) =>
       val dir = s"$tmp/$kind"
       build(dir)

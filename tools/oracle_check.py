@@ -10,11 +10,13 @@ the scale-factor tables (<table>.parquet). Each table is registered as a
 DuckDB view, every oracle query runs, and its result is compared with the
 dump on row count, column names and the rows themselves (values as
 strings, rows lexsorted on every column). Prints one line per mismatch and
-a summary; exits 1 on any mismatch or missing dump, 0 otherwise.
+a summary line that also carries the sha256 of the oracle_sql.json it
+checked; exits 1 on any mismatch or missing dump, 0 otherwise.
 
 Needs duckdb (1.0.0) and pandas.
 """
 import glob
+import hashlib
 import json
 import os
 import sys
@@ -28,8 +30,9 @@ def main(argv):
         print("usage: oracle_check.py <verify_out> <sfDir>", file=sys.stderr)
         return 2
     out, sf = argv[1], argv[2]
-    with open(os.path.join(out, "oracle_sql.json")) as f:
-        oracle = json.load(f)
+    with open(os.path.join(out, "oracle_sql.json"), "rb") as f:
+        raw = f.read()
+    oracle = json.loads(raw)
     con = duckdb.connect()
     for path in sorted(glob.glob(os.path.join(sf, "*.parquet"))):
         table = os.path.basename(path)[: -len(".parquet")]
@@ -65,7 +68,8 @@ def main(argv):
             print(g[diff].head(1).to_string())
         fails.append(name)
     ok = len(oracle) - len(fails)
-    print(f"{ok}/{len(oracle)} oracles match" + (f"; mismatched: {fails}" if fails else ""))
+    print(f"{ok}/{len(oracle)} oracles match; oracle_sql.json sha256 "
+          f"{hashlib.sha256(raw).hexdigest()}" + (f"; mismatched: {fails}" if fails else ""))
     return 1 if fails else 0
 
 
