@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.pipeline.{Extract, Extracted}
+import graft.pipeline.{Extracted, Udfs}
 import graft.table.{Lineage, TranscriptTable}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,10 +9,9 @@ import java.sql.Timestamp
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-final case class TurnB(conv_id: String, turn_idx: Int, role: String,
-    text: String, tool: String, ts: Timestamp, conv_bucket: Int)
-
-/** Extracted row = turn keys + the wide extraction struct. */
+/** Extracted row = turn keys + the wide extraction struct: a typed view
+  * (`as`, no deserialize step) of the frame [[ExtractJob.extractTurns]]
+  * builds with [[Udfs.extractTurn]]. */
 final case class ExtractedTurn(
     conv_id: String,
     turn_idx: Int,
@@ -29,7 +28,7 @@ final case class ExtractedTurn(
   *   → conv_bucket filter to the pending      (xxhash64 after the scan: the
   *     batches' ranges                         input is read once per run)
   *   → salted repartition                     (shuffle #1, skew-proof map stage)
-  *   → mapPartitions Extract.extract          (fused stages 2,4-8; no shuffle)
+  *   → Project extract_turn(text) AS ex       (fused stages 2,4-8, once per row)
   *   → batch column from conv_bucket
   *   → repartitionById(batch's task range     (shuffle #2: each task holds one
   *       + hash(conv_id) within it)            batch; each conversation whole)
@@ -41,7 +40,7 @@ final case class ExtractedTurn(
   *   → commitStaged per batch: manifest with  (driver-built, atomic commit)
   *     its bucket slice of the lineage
   *
-  * The extraction map is a pure per-turn function — embarrassingly parallel —
+  * The extraction is a pure per-turn function — embarrassingly parallel —
   * which is what makes ≥0.8 N→4N scaling efficiency achievable. Batches are
   * conv_bucket ranges and stay the commit unit; a killed run resumes by
   * skipping committed manifests. The failure unit is the run: a failure
@@ -73,13 +72,9 @@ object ExtractJob {
       // salt: uniform shuffle on (conv_id, turn_idx) so one long conversation
       // cannot pin a single task (north rule skew handling)
       .repartition(saltPartitions, xxhash64(col("conv_id"), col("turn_idx")))
-      .as[TurnB]
-      .mapPartitions { it =>
-        it.map { t =>
-          val ex = Extract.extractCached(t.text)
-          ExtractedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.ts, t.conv_bucket, ex)
-        }
-      }
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
+        col("conv_bucket"), Udfs.extractTurn(col("text")).as("ex"))
+      .as[ExtractedTurn]
   }
 
   /** The per-bucket lineage aggregate over extracted rows, as a flat
@@ -136,9 +131,9 @@ object ExtractJob {
     * (batch, conv_id, turn_idx) within a partition, so each conversation is
     * whole and turn-ordered in one file, and a batch gets at most
     * `ceil(parts / batches.size)` files. A range exchange would run a
-    * sampling job that recomputes the extraction map; the pass-through
+    * sampling job that recomputes the extraction; the pass-through
     * exchange does not. The trade-off: one giant conversation skews one
-    * write task, while the extraction map stays salted.
+    * write task, while the extraction stays salted.
     *
     * Scale-safe, exactly-once lineage: extraction runs once, streamed
     * straight to parquet (no cache, which at 100 TB would double I/O), and

@@ -40,7 +40,8 @@ final case class Extracted(
   * (meta beats ML on key collision; last-parseable date candidate wins).
   *
   * Pure function of the turn text — embarrassingly parallel; the Spark layer
-  * maps it over partitions with no shuffle (SURVEY.md §3.1). */
+  * applies it once per row through one operator, [[Udfs.extractTurn]]
+  * (SURVEY.md §3.1). */
 object Extract {
 
   /** User extension hooks, mirroring the reference's callback lists
@@ -97,9 +98,6 @@ object Extract {
     var i = 0
     while (i < MemoSlots) { memo.set(i, null); i += 1 }
   }
-
-  def extract(text: String, defaultUrl: String): Extracted =
-    extract(text, defaultUrl, true, NoHooks)
 
   def extract(text: String, defaultUrl: String, metadataMining: Boolean,
       hooks: Hooks): Extracted = {

@@ -5,14 +5,17 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.udf
 import scala.util.control.NonFatal
 
-/** Column-level entry points for the extraction stages (SURVEY.md §3.2):
-  * each stage individually testable; the fused `extract_turn` is the
-  * production path (one parse per turn). Plain JVM bodies — no Python/JNI
-  * boundary, runs inside whole-stage codegen's task loop. */
+/** Column-level entry points for the extraction stages (SURVEY.md §3.2),
+  * each individually testable; the fused `extract_turn` is the kernel's one
+  * Spark operator. Plain JVM bodies, run inside whole-stage codegen's task loop. */
 object Udfs {
 
-  /** Full fused pipeline: text -> Extracted struct. */
-  val extractTurn = udf((text: String) => Extract.extractCached(text))
+  /** text -> Extracted struct, named `extract_turn` in plans. Marked
+    * nondeterministic so that no filter on `ex.*` is pushed below it and runs
+    * the kernel again; the cost is that filters on other columns are not
+    * pushed through it either, so callers filter keys before extracting, as
+    * [[graft.jobs.ExtractJob.stage]] does. */
+  val extractTurn = udf(Extract.extractCached _).asNondeterministic().withName("extract_turn")
 
   /** text -> array of block texts (debug/test surface; production keeps
     * blocks nested per turn — exploding would force a re-group). */

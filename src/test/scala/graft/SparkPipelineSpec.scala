@@ -5,8 +5,13 @@ import graft.pipeline.Extract
 import graft.table.{Lineage, LineageRow, TranscriptTable}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.Observation
+import org.apache.spark.sql.{Encoders, Observation}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
@@ -52,6 +57,48 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
       checked += 1
     }
     assert(checked > 300)
+  }
+
+  test("the kernel runs once per row: one extract_turn call in each extraction plan") {
+    // the kernel is the one ScalaUDF that returns the Extracted struct; a
+    // filter on ex.* pushed below its Project would copy the call
+    val kernelType = Encoders.product[graft.pipeline.Extracted].schema.catalogString
+    def kernelCalls(plan: LogicalPlan): Int = plan.collectWithSubqueries { case p =>
+      p.expressions.map(_.collect {
+        case u: ScalaUDF if u.dataType.catalogString == kernelType => u
+      }.size).sum
+    }.sum
+    val dir = "/root/testdata/sf0.001"
+    val turns = Synth.turns(spark, 0.001, 4)
+    Seq(
+      "x_extract_turns" -> SparkEntry.queries("x_extract_turns")(spark, dir),
+      "x_author_names" -> SparkEntry.queries("x_author_names")(spark, dir),
+      "SparkEntry.entry" -> SparkEntry.entry(spark),
+      // Bench.extractionRun's form
+      "extractTurns + filter" ->
+        ExtractJob.extractTurns(spark, turns, 8).filter(col("ex.nBlocks") >= 0).toDF()
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(kernelCalls(plan) == 1, s"$name:\n$plan")
+    }
+    // the production write: every batch has rows at sf0.001, so one write
+    val out = "/tmp/graft_kernel_once"
+    rmrf(out)
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.optimizedPlan
+        if (plan.exists(_.isInstanceOf[DataWritingCommand])) counts.add(kernelCalls(plan))
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractJob.run(spark, turns, out, nBatches = 4, saltPartitions = 8)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(counts.toArray.toSeq == Seq(1), s"kernel calls per write query: $counts")
+    rmrf(out)
   }
 
   test("Udfs.register: the six SQL functions equal the direct Scala calls") {
@@ -694,6 +741,10 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(q7plan.contains("ReadSchema"), q7plan.take(800))
     assert(!q7plan.substring(q7plan.indexOf("ReadSchema")).contains("n_chars"),
       "n_chars must be pruned from the scan:\n" + q7plan.take(800))
+    // q1_pricing's scan reads its four columns only
+    val q1plan = SparkEntry.queries("q1_pricing")(spark, dir).queryExecution.executedPlan.toString
+    assert(q1plan.contains("ReadSchema: struct<l_quantity:double,l_extendedprice:double," +
+      "l_returnflag:string,l_linestatus:string>"), q1plan.take(1500))
     // predicate pushdown
     val filtered = spark.read.parquet(s"$dir/lineitem.parquet")
       .filter(col("l_orderkey") === 42L).select("l_quantity")
