@@ -112,7 +112,7 @@ object CurateJob {
     * measured 2.8x of the long-doc scale probe (BENCH.md). The filters run FIRST, so
     * the cross-corpus dedup sees only the already-curated sliver.
     * `bloomDir` (a FRESH [[graft.ops.BloomDedup]] filter — callers gate
-    * on [[graft.ops.BloomDedup.bloomFresh]]) replaces the exact-pass
+    * on [[graft.ops.StoreMeta.fresh]] for kind `bloom`) replaces the exact-pass
     * corpus md5 scan with the gate's O(batch) probe + sliver confirm;
     * the output contract is IDENTICAL (the gate is exact), only the
     * per-tick corpus scan disappears. */

@@ -167,9 +167,12 @@ object ExtractJob {
   /** Run extraction over a turns DataFrame into an Iceberg-like table, in
     * `nBatches` resumable bucket-range batches: one query stages every
     * pending batch, then each is committed with its slice of the lineage,
-    * in id order. A fully committed table starts no Spark job. */
+    * in id order. A fully committed table starts no Spark job.
+    * `nBatches` must be in 1 to [[Buckets]]. */
   def run(spark: SparkSession, turns: DataFrame, outTable: String,
       nBatches: Int = 4, saltPartitions: Int = 0): Unit = {
+    require(1 <= nBatches && nBatches <= Buckets,
+      s"nBatches must be in [1, $Buckets], got $nBatches")
     val parts = if (saltPartitions > 0) saltPartitions
       else spark.sparkContext.defaultParallelism
     val perBatch = (Buckets + nBatches - 1) / nBatches

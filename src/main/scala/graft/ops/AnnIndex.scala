@@ -281,15 +281,14 @@ object AnnIndex {
         }
     val nonEmpty = sources.filter(_._2.nonEmpty)
     if (nonEmpty.isEmpty) return emptyProbe(spark, "srp_bucket")
-    val q = query
-    val cosUdf = udf((v: Seq[Float]) => Similarity.cosine(v, q.toSeq))
     nonEmpty.map { case (base, probed) =>
         spark.read.option("basePath", base).parquet(probed: _*)
           .select(col("vec_id"), col("srp_bucket"), col("embedding"))
       }
       .reduce(_.unionByName(_))
       .filter(col("srp_bucket").isin(probes: _*)) // belt over the path pruning
-      .withColumn("cosine", cosUdf(col("embedding")))
+      .withColumn("cosine",
+        Similarity.cosineSimExpr(col("embedding"), typedLit(query)))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "srp_bucket", "cosine")
@@ -386,10 +385,9 @@ object AnnIndex {
     if (meta.nRows == 0L) return emptyProbe(spark, "ivf_cell")
     val readProbed = probedReader(spark, dir, meta, query, k, nProbe)
       .getOrElse(return emptyProbe(spark, "ivf_cell"))
-    val q = query
-    val cosUdf = udf((v: Seq[Float]) => Similarity.cosine(v, q.toSeq))
     readProbed(Seq("vec_id", "ivf_cell", "embedding"))
-      .withColumn("cosine", cosUdf(col("embedding")))
+      .withColumn("cosine",
+        Similarity.cosineSimExpr(col("embedding"), typedLit(query)))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "ivf_cell", "cosine")
@@ -507,11 +505,10 @@ object AnnIndex {
     if (shortlist.isEmpty) return emptyProbe(spark, "ivf_cell")
     // phase 2: exact refine of the shortlist only — the ids travel as an
     // `isin` literal so the refine scan carries a pushable parquet filter
-    val q = query
-    val cosUdf = udf((v: Seq[Float]) => Similarity.cosine(v, q.toSeq))
     readProbed(Seq("vec_id", "ivf_cell", "embedding"))
       .filter(col("vec_id").isin(shortlist: _*))
-      .withColumn("cosine", cosUdf(col("embedding")))
+      .withColumn("cosine",
+        Similarity.cosineSimExpr(col("embedding"), typedLit(query)))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "ivf_cell", "cosine")

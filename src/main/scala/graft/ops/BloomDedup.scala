@@ -94,12 +94,6 @@ object BloomDedup {
     true
   }
 
-  /** True when the committed filter covers exactly the corpus with this
-    * freshness token ([[StoreMeta.fresh]]): warm callers gate on it, a
-    * stale token degrades to the direct path, never to a wrong answer. */
-  def bloomFresh(spark: SparkSession, dir: String, token: Option[Long]): Boolean =
-    StoreMeta.fresh(spark, dir, "bloom", token)
-
   // null-safe: a null text row has a null md5 and NO key — it can never
   // match anything (SQL join keys never equal null), so key extraction
   // drops it and probes answer "definitely new" instead of NPE-ing the task
@@ -126,7 +120,7 @@ object BloomDedup {
       rebuild: Boolean = false): Unit = {
     val spark = corpus.sparkSession
     val token = StoreMeta.inputToken(corpus)
-    if (!rebuild && bloomFresh(spark, dir, token)) return
+    if (!rebuild && StoreMeta.fresh(spark, dir, "bloom", token)) return
     // barrier: the store write, count, and filter build all read the keys
     val keys = keyed(corpus, textCol, shards).localCheckpoint()
     val nKeys = keys.count()

@@ -170,23 +170,11 @@ object Bm25 {
     *    meta, so the warm query path reads them without any corpus-sized
     *    scan (`topKStore` runs stats-injected `topKIndexed`).
     * The meta keys, freshness rule and kind guard are [[StoreMeta]]'s. */
-  def postingsStoreFresh(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpusToken: Option[Long]): Boolean =
-    StoreMeta.fresh(spark, dir, "bm25", corpusToken)
-
-  /** Postings-frame write fanout: ~2M occurrences per output file, capped
-    * at the caller's bucket count and floored at one — a 2-doc tick batch
-    * lands ONE file instead of 32 near-empty ones (file-count growth per
-    * append is then bounded by batch size, not by a constant 32; footers
-    * stay proportional to data). */
-  private def writeBuckets(sumDl: Long, nBuckets: Int): Int =
-    math.max(1L, math.min(nBuckets.toLong, sumDl / 2000000L + 1L)).toInt
-
   def buildPostingsStore(docs: DataFrame, dir: String, nBuckets: Int = 32,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
     val token = StoreMeta.inputToken(docs)
-    if (postingsStoreFresh(spark, dir, token)) return
+    if (StoreMeta.fresh(spark, dir, "bm25", token)) return
     val p = index(docs, idCol, textCol).localCheckpoint() // write + stats
     val (n, sumDl) = rawStats(p)
     p.repartition(writeBuckets(sumDl, nBuckets), col("term"))
@@ -196,6 +184,14 @@ object Bm25 {
     StoreMeta.write(spark, dir, StoreMeta.of("kind" -> "bm25",
       "token" -> token.getOrElse(0L), "n_docs" -> n, "sum_dl" -> sumDl))
   }
+
+  /** Postings-frame write fanout: ~2M occurrences per output file, capped
+    * at the caller's bucket count and floored at one — a 2-doc tick batch
+    * lands ONE file instead of 32 near-empty ones (file-count growth per
+    * append is then bounded by batch size, not by a constant 32; footers
+    * stay proportional to data). */
+  private def writeBuckets(sumDl: Long, nBuckets: Int): Int =
+    math.max(1L, math.min(nBuckets.toLong, sumDl / 2000000L + 1L)).toInt
 
   /** O(batch): the new batch's postings append as more term-sorted files;
     * corpus scalars accumulate in the meta. `corpusToken` is the

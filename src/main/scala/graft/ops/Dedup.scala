@@ -396,7 +396,7 @@ object Dedup {
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
     val token = StoreMeta.inputToken(docs)
-    if (signatureStoreFresh(spark, dir, token)) return
+    if (StoreMeta.fresh(spark, dir, "minhash", token)) return
     docs.select(col("doc_id"), minhashUdf(col(textCol)).as("sig"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/sigs")
@@ -426,12 +426,6 @@ object Dedup {
       .parquet(s"$dir/sigs")
     StoreMeta.write(spark, dir, meta.updated("token" -> corpusToken.getOrElse(0L)))
   }
-
-  /** True when the store's committed token matches `corpusToken` — the
-    * zero-job freshness check callers use to decide warm vs rebuild. */
-  def signatureStoreFresh(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpusToken: Option[Long]): Boolean =
-    StoreMeta.fresh(spark, dir, "minhash", corpusToken)
 
   // -------------------------------------------------------------- simhash
   /** 64-bit SimHash over token unigrams (token frequency weighted),

@@ -154,11 +154,9 @@ object Pq {
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val shortlist = adcTopK(codes, model, query, refine * k, idCol)
       .select(col(idCol))
-    val q = query
-    val cosUdf = udf((v: Seq[Float]) => Similarity.cosine(v, q.toSeq))
     embeddings
       .join(broadcast(shortlist), Seq(idCol))
-      .withColumn("cosine", cosUdf(col(embCol)))
+      .withColumn("cosine", Similarity.cosineSimExpr(col(embCol), typedLit(query)))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
       .select(col(idCol), col("cosine"))

@@ -10,7 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native cosine over two array<float> columns — static-call codegen into
   * the shared fp64 kernel (same accumulation order as Similarity.cosine,
-  * bit-parity pinned in OpsSpec). The UDF form boxes every element into a
+  * bit-parity pinned in OpsSpec). It is the one cosine of every Spark path:
+  * pair verification takes two columns, and a query re-rank takes the
+  * query as a `typedLit` array. A UDF form would box every element into a
   * Seq[Float] per row; in a 10^8-candidate LSH verify loop that boxing IS
   * the bottleneck (GC livelock observed at 1M vectors, BENCH.md round 4). */
 case class CosineSim(left: Expression, right: Expression)
@@ -45,7 +47,8 @@ case class CosineSim(left: Expression, right: Expression)
   * bucketing is the 100 TB path (candidates only within matching buckets). */
 object Similarity {
 
-  /** Cosine similarity of two float vectors (fp64 accumulation). */
+  /** Cosine similarity of two float vectors (fp64 accumulation) — the
+    * plain-Scala reference [[CosineSim]] is tested against. */
   def cosine(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -82,31 +85,12 @@ object Similarity {
       org.apache.spark.sql.graftbridge.toExpression(a),
       org.apache.spark.sql.graftbridge.toExpression(b)))
 
-  /** Native-functions cosine over two Array[Float] columns — zip_with +
-    * aggregate higher-order functions, no UDF serialization boundary, pure
-    * Column composition usable from SQL. Accumulates left-to-right in fp64
-    * exactly like [[cosine]] (bit-parity pinned in OpsSpec). The UDF stays
-    * in the scan-heavy paths (one traversal vs three); this is the form
-    * for SQL-level composition and for engines that reject closures. */
-  def cosineColumn(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def dotD(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      aggregate(
-        zip_with(x, y, (u, v) => u.cast("double") * v.cast("double")),
-        lit(0.0), (acc, v) => acc + coalesce(v, lit(0.0)))
-    val dot = dotD(a, b)
-    val na = dotD(a, a)
-    val nb = dotD(b, b)
-    when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot / sqrt(na * nb))
-  }
-
   /** Exact brute-force top-k by cosine against one query vector: map-side
     * scoring + a global top-k (sortBy-limit, handled as TakeOrdered —
     * no full sort at scale). */
   def bruteForceTopK(embeddings: DataFrame, query: Array[Float], k: Int): DataFrame = {
-    val q = query // serialized into the closure once; broadcast-sized
-    val cosUdf = udf((v: Seq[Float]) => cosine(v, q.toSeq))
     embeddings
-      .withColumn("cosine", cosUdf(col("embedding")))
+      .withColumn("cosine", cosineSimExpr(col("embedding"), typedLit(query)))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "cosine")
@@ -168,12 +152,10 @@ object Similarity {
     val qBucket = srpBucket(query.toSeq, nb)
     val probes = (0 until (1 << nb))
       .filter(b => java.lang.Integer.bitCount(b ^ qBucket) <= h)
-    val q = query
-    val cosUdf = udf((v: Seq[Float]) => cosine(v, q.toSeq))
     embeddings
       .withColumn("srp_bucket", srpBucketUdf(nb)(col("embedding")))
       .filter(col("srp_bucket").isin(probes: _*))
-      .withColumn("cosine", cosUdf(col("embedding")))
+      .withColumn("cosine", cosineSimExpr(col("embedding"), typedLit(query)))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "srp_bucket", "cosine")
@@ -349,12 +331,10 @@ object Similarity {
     }.take(nProbe).toSet
     val kern = new CentroidKernel(centers)
     val cellUdf = udf((v: Seq[Float]) => kern.nearest(v))
-    val q = query
-    val cosUdf = udf((v: Seq[Float]) => cosine(v, q.toSeq))
     emb
       .withColumn("ivf_cell", cellUdf(col("embedding")))
       .filter(col("ivf_cell").isin(probeCells.toSeq: _*))
-      .withColumn("cosine", cosUdf(col("embedding")))
+      .withColumn("cosine", cosineSimExpr(col("embedding"), typedLit(query)))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "ivf_cell", "cosine")

@@ -377,10 +377,11 @@ object Sketches {
   // ------------------------------------------------- persisted store
 
   /** Persisted corpus-stat sketches for the ongoing pipeline: HLL over the
-    * corpus vocabulary + CMS over term occurrences, token-gated like the
-    * signature store. The store is APPEND-ONLY — each tick writes its
-    * batch's register rows and readers merge (groupBy max / sum, O(#batch
-    * sketches × m)), so maintenance is O(batch) with no read-modify-write.
+    * corpus vocabulary + CMS over term occurrences + DD over doc lengths,
+    * token-gated like the signature store. The store is APPEND-ONLY —
+    * each tick writes its batch's register rows and readers merge
+    * (groupBy max / sum, O(#batch sketches × m)), so maintenance is
+    * O(batch) with no read-modify-write.
     * Sketches never subtract: after a CoW delete/merge rewrites the table,
     * the input token moves and the next tick rebuilds (degrade-to-correct,
     * the signature-store contract). Meta, freshness and the kind guard on
@@ -390,26 +391,11 @@ object Sketches {
       explode(expr(s"filter(split(lower($textCol), '\\\\W+'), x -> x != '')"))
         .as("term"))
 
-  def sketchStoreFresh(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpusToken: Option[Long]): Boolean =
-    StoreMeta.fresh(spark, dir, "sketches", corpusToken)
-
   def buildSketchStore(docs: DataFrame, dir: String,
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
     val token = StoreMeta.inputToken(docs)
-    if (sketchStoreFresh(spark, dir, token)) {
-      // upgrade path: a store built before the dd leg existed is token-
-      // fresh but has no dd/ — backfill it from the same corpus instead of
-      // leaving readDdStore to throw (appends deliberately skip a missing
-      // dd/ so a partial, base-less sketch can never appear)
-      val ddPath = new org.apache.hadoop.fs.Path(s"$dir/dd")
-      val fs = ddPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(ddPath))
-        ddSketch(docLens(docs, textCol), "dl").write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/dd")
-      return
-    }
+    if (StoreMeta.fresh(spark, dir, "sketches", token)) return
     val t = terms(docs, textCol).localCheckpoint() // 2 consumers
     hllSketch(t, "term").write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/hll")
@@ -428,21 +414,14 @@ object Sketches {
       size(expr(s"filter(split(lower($textCol), '\\\\W+'), x -> x != '')"))
         .cast("long").as("dl"))
 
-  /** O(batch): append the new batch's sketch rows; `corpusToken` is the
-    * post-commit table token (the appendSignatureStore convention).
-    *
-    * dd-leg upgrade path: a store built before the dd leg existed never
-    * goes stale under warm operation (every append re-pins the token), so
-    * the buildSketchStore backfill alone would be unreachable. When dd/
-    * is missing and the caller supplies `ddBackfill` (the POST-COMMIT
-    * corpus — it already contains this batch), the leg is built whole
-    * from it in one shot; without a backfill corpus the leg is SKIPPED —
-    * appending only the batch would create a base-less sketch that
-    * silently undercounts, and a loud path-not-found from readDdStore
-    * beats a wrong quantile. */
+  /** O(batch): append the new batch's hll, cms and dd rows;
+    * `corpusToken` is the post-commit table token (the
+    * appendSignatureStore convention). Every build writes all three legs
+    * before its meta, so a store with a meta always has them; a crash
+    * part-way through a build or an append leaves a stale token, and the
+    * next tick rebuilds the store. */
   def appendSketchStore(newDocs: DataFrame, dir: String,
-      corpusToken: Option[Long], textCol: String = "text",
-      ddBackfill: Option[DataFrame] = None): Unit = {
+      corpusToken: Option[Long], textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
     val meta = StoreMeta.expect(spark, dir, "sketches")
     val t = terms(newDocs, textCol).localCheckpoint()
@@ -450,15 +429,8 @@ object Sketches {
       .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/hll")
     cmsSketch(t, "term").write
       .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/cms")
-    val ddPath = new org.apache.hadoop.fs.Path(s"$dir/dd")
-    val fs = ddPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ddPath))
-      ddSketch(docLens(newDocs, textCol), "dl").write
-        .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/dd")
-    else ddBackfill.foreach { corpus =>
-      ddSketch(docLens(corpus, textCol), "dl").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/dd")
-    }
+    ddSketch(docLens(newDocs, textCol), "dl").write
+      .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/dd")
     StoreMeta.write(spark, dir, meta.updated("token" -> corpusToken.getOrElse(0L)))
   }
 

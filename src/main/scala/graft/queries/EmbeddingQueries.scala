@@ -424,17 +424,16 @@ object EmbeddingQueries {
     }, order = by("rank"),
       oracle = Some(bruteTopKSql)),
     Query("x_cosine_pairs", (s, dir) => {
-      // consecutive-pair cosine via NATIVE higher-order functions
-      // (zip_with + aggregate — no UDF boundary), oracle-checked against
-      // DuckDB's list_cosine_similarity at 6 decimals (same rounding
-      // contract as x_ann_brute)
+      // consecutive-pair cosine via the codegen'd CosineSim (no UDF
+      // boundary), oracle-checked against DuckDB's list_cosine_similarity
+      // at 6 decimals (same rounding contract as x_ann_brute)
       val e = t(s, dir, "embeddings")
       val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
       val b = e.select((col("vec_id") - 1).as("vec_a"),
         col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
       a.join(b, Seq("vec_a"))
         .select(col("vec_a"), col("vec_b"),
-          round(Similarity.cosineColumn(col("emb_a"), col("emb_b")), 6).as("cosine_r6"))
+          round(Similarity.cosineSimExpr(col("emb_a"), col("emb_b")), 6).as("cosine_r6"))
     }, order = by("vec_a"),
       oracle = Some(
         """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,

@@ -7,10 +7,7 @@ import java.sql.Timestamp
 /** One event of the streaming sessionizer input (mirrors the events table). */
 final case class SessionEvent(user_id: Long, event_id: Long, ts: Timestamp)
 
-/** Per-user open-session state: millis epoch bounds + event count. */
-final case class OpenSession(start: Long, last: Long, n: Long)
-
-/** Buffered-mode state: the user's not-yet-finalized events. */
+/** Per-user state: the user's not-yet-finalized events. */
 final case class BufEvent(ts: Long, id: Long)
 final case class SessionBuf(events: Seq[BufEvent])
 
@@ -21,83 +18,22 @@ final case class ClosedSession(user_id: Long, session_start: Timestamp,
 /** Gap-based streaming sessionization with CUSTOM state
   * (`flatMapGroupsWithState`) — the streaming twin of the batch
   * q13_sessionize window query, and the stateful-operator surface the
-  * engine exposes beyond `dropDuplicatesWithinWatermark`.
-  *
-  * State shape at scale: ONE `OpenSession` row per active user, keyed on
-  * the well-distributed user_id; idle users are evicted by event-time
-  * timeout once the watermark passes `last + gap`, so state size tracks
-  * the concurrently-active population, not history. A session closes
-  * either when a later event arrives past the gap (emitted in that batch)
-  * or by timeout (emitted when the watermark crosses it). */
+  * engine exposes beyond `dropDuplicatesWithinWatermark`. */
 object StreamingSessions {
-
-  def sessionize(events: Dataset[SessionEvent], gapMinutes: Int = 30,
-      watermark: String = "10 minutes"): Dataset[ClosedSession] = {
-    val gapMs = gapMinutes * 60000L
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last+gap with no newer event: close and evict
-            val s = state.get
-            state.remove()
-            Iterator(ClosedSession(user, new Timestamp(s.start),
-              new Timestamp(s.last), s.n))
-          } else {
-            // flatMapGroupsWithState does NOT drop late rows itself (unlike
-            // the built-in stateful operators): an event below the current
-            // watermark may belong to a session that already closed — merging
-            // it into the newer open session would diverge from the batch
-            // q13 semantics, so it is dropped here, exactly the contract the
-            // watermark declares
-            val wm = state.getCurrentWatermarkMs()
-            // per-batch events for this user, in event-time order (the
-            // iterator is NOT ordered; a batch may span several sessions)
-            val sorted = evs.filter(_.ts.getTime >= wm)
-              .toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var open = state.getOption
-            val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              open match {
-                case Some(s) if t - s.last > gapMs =>
-                  closed += ClosedSession(user, new Timestamp(s.start),
-                    new Timestamp(s.last), s.n)
-                  open = Some(OpenSession(t, t, 1))
-                case Some(s) =>
-                  open = Some(OpenSession(s.start, math.max(s.last, t), s.n + 1))
-                case None =>
-                  open = Some(OpenSession(t, t, 1))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              // timeout must sit strictly past the current watermark
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs, state.getCurrentWatermarkMs() + 1))
-            }
-            closed.iterator
-          }
-      }
-  }
 
   /** EXACT batch-q13 semantics under out-of-order, cross-batch arrival:
     * events are BUFFERED in state and a session is emitted only once the
     * watermark passes `last + gap` — the point after which no allowed event
     * (ts >= watermark) can extend it, land in the gap after it, or merge it
-    * with a later session. [[sessionize]] closes eagerly when a later event
-    * crosses the gap, so a late-but-allowed event arriving after that close
-    * is mis-attributed to the newer session; here it lands in the buffer
-    * and sessionization is recomputed from the full surviving event set.
+    * with a later session. A late-but-allowed event that arrives after a
+    * later event has crossed the gap still lands in the buffer, and
+    * sessionization is recomputed from the full surviving event set.
     *
-    * The trade: emission latency is one watermark delay + gap (vs eager),
-    * and state holds every event inside the (gap + lateness) horizon per
-    * user — still bounded by construction, keyed on the well-distributed
-    * user_id. Below-watermark events are dropped in both variants (the
-    * lateness contract the watermark declares). */
+    * The cost: emission latency is one watermark delay + gap, and state
+    * holds every event inside the (gap + lateness) horizon per user —
+    * bounded by construction, keyed on the well-distributed user_id; idle
+    * users are evicted by event-time timeout. Below-watermark events are
+    * dropped (the lateness contract the watermark declares). */
   def sessionizeBuffered(events: Dataset[SessionEvent], gapMinutes: Int = 30,
       watermark: String = "10 minutes"): Dataset[ClosedSession] = {
     val gapMs = gapMinutes * 60000L

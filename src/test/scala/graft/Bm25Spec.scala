@@ -112,8 +112,8 @@ class Bm25Spec extends AnyFunSuite with SparkSuite {
     assert(fromStore.exceptAll(inMem).isEmpty &&
       inMem.exceptAll(fromStore).isEmpty)
     // token gate: a fresh store must no-op the rebuild
-    assert(Bm25.postingsStoreFresh(spark, dir, Some(42L)))
-    assert(!Bm25.postingsStoreFresh(spark, dir, Some(43L)))
+    assert(graft.ops.StoreMeta.fresh(spark, dir, "bm25", Some(42L)))
+    assert(!graft.ops.StoreMeta.fresh(spark, dir, "bm25", Some(43L)))
     // append on an unbuilt store is loud
     intercept[IllegalStateException] {
       Bm25.appendPostingsStore(batch2, s"$dir-nope", Some(1L))

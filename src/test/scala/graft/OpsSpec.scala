@@ -244,24 +244,19 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(overlap >= 0.6, s"recall floor: overlap=$overlap")
   }
 
-  test("native zip_with/aggregate cosine is bit-identical to the UDF cosine") {
+  test("native CosineSim is bit-identical to the reference cosine") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = emb.select((col("vec_id") - 1).as("vec_a"), col("embedding").as("emb_b"))
     val cosUdf = udf((x: Seq[Float], y: Seq[Float]) => Similarity.cosine(x, y))
     val rows = a.join(b, Seq("vec_a"))
       .select(
-        Similarity.cosineColumn(col("emb_a"), col("emb_b")).as("native"),
-        cosUdf(col("emb_a"), col("emb_b")).as("viaUdf"),
+        cosUdf(col("emb_a"), col("emb_b")).as("reference"),
         Similarity.cosineSimExpr(col("emb_a"), col("emb_b")).as("viaExpr"))
       .collect()
     assert(rows.nonEmpty)
     // same fp64 accumulation order -> exactly equal, not just close
-    // (all THREE entries: HOF column, boxed UDF, codegen'd CosineSim)
-    rows.foreach { r =>
-      assert(r.getDouble(0) == r.getDouble(1), r.toString)
-      assert(r.getDouble(2) == r.getDouble(1), r.toString)
-    }
+    rows.foreach(r => assert(r.getDouble(1) == r.getDouble(0), r.toString))
     // CosineSim rejects non-array<float> args at analysis time
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       emb.select(Similarity.cosineSimExpr(col("vec_id"), col("embedding"))).collect()

@@ -205,32 +205,6 @@ class SketchesSpec extends AnyFunSuite with SparkSuite {
     assert(shift > 80.0 && shift < 120.0, shift.toString)
   }
 
-  test("DD: a pre-dd store gains its leg via the append-time backfill") {
-    val sp = spark; import sp.implicits._
-    val dir = "/tmp/graft_dd_backfill_store"
-    graft.util.Fs.rmrf(dir)
-    val a = Seq((1L, "alpha beta gamma"), (2L, "beta beta"))
-      .toDF("doc_id", "text")
-    val b = Seq((3L, "gamma delta epsilon zeta"))
-      .toDF("doc_id", "text")
-    Sketches.buildSketchStore(a, dir)
-    graft.util.Fs.rmrf(s"$dir/dd") // simulate a store from before the leg
-    // warm append WITHOUT a backfill corpus: leg stays absent (loud, not
-    // silently base-less)
-    Sketches.appendSketchStore(b, dir, Some(5L))
-    assert(!new java.io.File(s"$dir/dd").exists())
-    // warm append WITH the post-commit corpus: the leg is built whole
-    val all = a.unionByName(b)
-    Sketches.appendSketchStore(b.limit(0), dir, Some(6L),
-      ddBackfill = Some(all))
-    val dd = Sketches.readDdStore(spark, dir)
-    val direct = Sketches.ddSketch(all.select(
-      size(expr("filter(split(lower(text), '\\\\W+'), x -> x != '')"))
-        .cast("long").as("dl")), "dl")
-    assert(dd.except(direct).isEmpty && direct.except(dd).isEmpty)
-    graft.util.Fs.rmrf(dir)
-  }
-
   test("DD: zero and negative quantiles resolve through the mirrored store") {
     val vs = Seq.fill(10)(-8L) ++ Seq.fill(10)(0L) ++ Seq.fill(10)(9L)
     val sketch = Sketches.ddSketch(vals(vs), "v")

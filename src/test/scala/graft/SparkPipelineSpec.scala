@@ -239,6 +239,21 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     Seq(src, out).foreach(rmrf)
   }
 
+  test("run rejects a batch count outside 1 to Buckets before writing anything") {
+    val out = "/tmp/graft_test_nbatches"
+    rmrf(out)
+    val turns = Synth.turns(spark, 0.001, 4)
+    // unchecked, 0 divides by zero, -1 plans no batch and returns, and 65
+    // commits batches b064… that no bucket can ever fill
+    Seq(0, -1, ExtractJob.Buckets + 1).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        ExtractJob.run(spark, turns, out, nBatches = n, saltPartitions = 8)
+      }
+      assert(e.getMessage.contains(s"[1, ${ExtractJob.Buckets}], got $n"), e.getMessage)
+      assert(!Files.exists(Paths.get(out)), s"nBatches = $n wrote $out")
+    }
+  }
+
   test("every manifest file is the exact render of its parsed record") {
     // pins the on-disk layout: the bytes a run writes are what Manifest
     // renders, so readers that match the text (perfbench's lineage digest)
@@ -374,7 +389,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(after2 == Set(1000L, 1001L, 1002L, 1003L, 2002L), after2.toString)
     // the store was re-pinned by tick 2 -> tick 3 takes the WARM path
-    assert(graft.ops.Dedup.signatureStoreFresh(spark, sigDir,
+    assert(graft.ops.StoreMeta.fresh(spark, sigDir, "minhash",
       graft.ops.StoreMeta.inputToken(
         TranscriptTable.read(spark, table).select("doc_id", "text"))),
       "store must be fresh for the next tick (warm path)")
@@ -413,7 +428,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     // tick 1 built the filter over the committed table → tick 2 is warm
     val tok1 = graft.ops.StoreMeta.inputToken(
       TranscriptTable.read(spark, table).select("doc_id", "text"))
-    assert(graft.ops.BloomDedup.bloomFresh(spark, bloomDir, tok1),
+    assert(graft.ops.StoreMeta.fresh(spark, bloomDir, "bloom", tok1),
       "filter must be fresh for the next tick")
 
     // tick 2: exact dup (gated through the bloom path), near-dup, fresh
@@ -428,7 +443,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     // the filter was APPENDED (not rebuilt) and re-pinned to the new table
     val tok2 = graft.ops.StoreMeta.inputToken(
       TranscriptTable.read(spark, table).select("doc_id", "text"))
-    assert(graft.ops.BloomDedup.bloomFresh(spark, bloomDir, tok2))
+    assert(graft.ops.StoreMeta.fresh(spark, bloomDir, "bloom", tok2))
     val (nKeys, _) = graft.ops.BloomDedup.bloomLoad(spark, bloomDir)
     assert(nKeys == 4L, s"3 seed keys + 1 tick-2 survivor, got $nKeys")
 
@@ -471,7 +486,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(hllFiles2 > hllFiles1, "tick 2 must append, not rebuild")
     val tok = graft.ops.StoreMeta.inputToken(
       TranscriptTable.read(spark, table).select("doc_id", "text"))
-    assert(graft.ops.Sketches.sketchStoreFresh(spark, sketchDir, tok))
+    assert(graft.ops.StoreMeta.fresh(spark, sketchDir, "sketches", tok))
     // read-side merge == direct sketches over the final table
     val corpus = TranscriptTable.read(spark, table).select("doc_id", "text")
       .withColumn("term",
@@ -494,7 +509,7 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     val postFiles2 = new java.io.File(s"$postDir/postings")
       .listFiles.count(_.getName.endsWith(".parquet"))
     assert(postFiles2 > postFiles1, "postings tick 2 must append")
-    assert(graft.ops.Bm25.postingsStoreFresh(spark, postDir, tok))
+    assert(graft.ops.StoreMeta.fresh(spark, postDir, "bm25", tok))
     val q = Seq((1L, enText(1).split(" ").take(4).mkString(" ")))
       .toDF("query_id", "query_text")
     val fromStore = graft.ops.Bm25.topKStore(spark, postDir, q, k = 3)
@@ -503,6 +518,77 @@ class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(fromStore.exceptAll(direct).isEmpty &&
       direct.exceptAll(fromStore).isEmpty)
     Seq(table, sigDir, sketchDir, postDir).foreach(rmrf)
+  }
+
+  test("incremental pipeline cold path: a compacted table rebuilds all four stores, same answers") {
+    val sp = spark
+    import sp.implicits._
+    import graft.ops.StoreMeta
+    def enText(seed: Long): String = (0 until 60).map(i =>
+      "the word" + graft.jobs.Synth.mix(seed * 97 + i).toHexString.take(3) +
+        " of this and that for is").mkString(" ")
+    def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    val ticks = Seq(
+      "b001" -> docs((1000L, enText(1)), (1001L, enText(2)), (1002L, enText(3)),
+        (1003L, enText(4))),
+      "b002" -> docs((2000L, enText(1)), (2001L, enText(2) + " with tail words"),
+        (2002L, enText(5)), (2003L, "zz")),
+      // near-dup of a tick-2 survivor, exact dup of a tick-1 doc, fresh
+      "b003" -> docs((3000L, enText(5) + " trailing bits"), (3001L, enText(3)),
+        (3002L, enText(6))))
+    // (kind, dir) of the four stores the tick keeps under `root`
+    def stores(root: String) = Seq("minhash" -> s"${root}_sigs",
+      "bloom" -> s"${root}_bloom", "sketches" -> s"${root}_sketch",
+      "bm25" -> s"${root}_postings")
+    def tick(root: String, id: String, batch: org.apache.spark.sql.DataFrame): Unit = {
+      val dirs = stores(root).map(_._2)
+      graft.jobs.IncrementalPipeline.runBatch(spark, batch, root, dirs(0), id,
+        bloomDir = dirs(1), sketchDir = dirs(2), postingsDir = dirs(3))
+    }
+    def token(root: String) =
+      StoreMeta.inputToken(TranscriptTable.read(spark, root).select("doc_id", "text"))
+    def dataFiles(dir: String): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+        else if (f.getName.endsWith(".parquet")) Seq(f.getPath) else Nil
+      walk(new java.io.File(dir)).toSet
+    }
+    def rows(root: String) = TranscriptTable.read(spark, root)
+      .select("doc_id", "text").as[(Long, String)].collect().toSet
+    val ref = "/tmp/graft_inc_cold_ref"
+    val cmp = "/tmp/graft_inc_cold_cmp"
+    val all = Seq(ref, cmp).flatMap(r => r +: stores(r).map(_._2))
+    all.foreach(rmrf)
+
+    // reference: three ticks on an uncompacted table (tick 3 warm)
+    ticks.foreach { case (id, batch) => tick(ref, id, batch) }
+    // same ticks, with the two live batches compacted before tick 3
+    ticks.take(2).foreach { case (id, batch) => tick(cmp, id, batch) }
+    TranscriptTable.compact(spark, cmp, Seq("b001", "b002"), "b002c")
+    assert(TranscriptTable.liveBatches(cmp) == Seq("b002c"))
+    // the compaction moved the table token: every store reads stale, so
+    // tick 3 curates on the direct path (no signature store, no Bloom gate)
+    val moved = token(cmp)
+    stores(cmp).foreach { case (kind, dir) =>
+      assert(!StoreMeta.fresh(spark, dir, kind, moved), s"$kind must read stale")
+    }
+    val before = stores(cmp).map { case (_, dir) => dir -> dataFiles(dir) }.toMap
+    tick(cmp, "b003", ticks(2)._2)
+
+    assert(rows(cmp) == rows(ref), s"${rows(cmp).map(_._1)} vs ${rows(ref).map(_._1)}")
+    assert(rows(cmp).map(_._1) == Set(1000L, 1001L, 1002L, 1003L, 2002L, 3002L))
+    val after = token(cmp)
+    stores(cmp).foreach { case (kind, dir) =>
+      assert(StoreMeta.fresh(spark, dir, kind, after), s"$kind must be fresh")
+      // rebuilt, not appended to: no data file from before tick 3 is left
+      val kept = before(dir) intersect dataFiles(dir)
+      assert(before(dir).nonEmpty && kept.isEmpty, s"$kind kept $kept")
+    }
+    // the rebuilt stores cover the six committed docs
+    assert(graft.ops.Dedup.readSignatureStore(spark, stores(cmp)(0)._2).count() == 6)
+    assert(graft.ops.BloomDedup.bloomLoad(spark, stores(cmp)(1)._2)._1 == 6L)
+    assert(graft.ops.Bm25.readPostingsStore(spark, stores(cmp)(3)._2)._2._1 == 6L)
+    all.foreach(rmrf)
   }
 
   test("schema evolution: added columns resolve from manifests, old rows read null") {

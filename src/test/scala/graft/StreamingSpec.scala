@@ -183,7 +183,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(ids == Set(1000L, 1001L, 1002L, 1003L, 2002L), ids.toString)
     assert(graft.table.TranscriptTable.committedRowCount(table) == 5)
     // the store was re-pinned by the last data batch -> next tick is warm
-    assert(graft.ops.Dedup.signatureStoreFresh(spark, sigDir,
+    assert(graft.ops.StoreMeta.fresh(spark, sigDir, "minhash",
       graft.ops.StoreMeta.inputToken(
         graft.table.TranscriptTable.read(spark, table).select("doc_id", "text"))),
       "store must be fresh after the streaming ticks")
@@ -232,45 +232,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(out.columns.toSet == Set("conv_id", "turn_idx", "role", "text", "tool", "ts"))
     rmrf(src)
   }
-  test("stateful streaming sessionization via flatMapGroupsWithState") {
-    val sp = spark
-    import sp.implicits._
-    import graft.streaming.{ClosedSession, SessionEvent, StreamingSessions}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import java.sql.Timestamp
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(min: Long) = new Timestamp(1700000000000L + min * 60000L)
-
-    val input = MemoryStream[SessionEvent]
-    val q = StreamingSessions.sessionize(input.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("graft_sessions")
-      .outputMode("append").start()
-    try {
-      // user 1: two events 10 min apart — one open session, nothing emitted
-      input.addData(SessionEvent(1L, 1L, ts(0)), SessionEvent(1L, 2L, ts(10)))
-      q.processAllAvailable()
-      assert(spark.table("graft_sessions").count() == 0)
-
-      // an event 60 min later crosses the 30-min gap: closes session 1
-      input.addData(SessionEvent(1L, 3L, ts(70)))
-      q.processAllAvailable()
-      val first = spark.table("graft_sessions").as[ClosedSession].collect().toSeq
-      assert(first == Seq(ClosedSession(1L, ts(0), ts(10), 2)), first.toString)
-
-      // advance the watermark far past user 1's last+gap via another user;
-      // the event-time TIMEOUT closes the open session with no more input
-      // from user 1 (watermark updates become visible one batch later)
-      input.addData(SessionEvent(2L, 4L, ts(300)))
-      q.processAllAvailable()
-      input.addData(SessionEvent(2L, 5L, ts(301)))
-      q.processAllAvailable()
-      val all = spark.table("graft_sessions").as[ClosedSession].collect().toSeq
-      assert(all.contains(ClosedSession(1L, ts(70), ts(70), 1)), all.toString)
-      // user 2's session is still open (watermark has not passed its gap)
-      assert(!all.exists(_.user_id == 2L), all.toString)
-    } finally q.stop()
-  }
-
   test("streaming sessionization drops cross-batch late events below the watermark") {
     val sp = spark
     import sp.implicits._
@@ -281,7 +242,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     def ts(min: Long) = new Timestamp(1700000000000L + min * 60000L)
 
     val input = MemoryStream[SessionEvent]
-    val q = StreamingSessions.sessionize(input.toDS(), gapMinutes = 30)
+    val q = StreamingSessions.sessionizeBuffered(input.toDS(), gapMinutes = 30)
       .writeStream.format("memory").queryName("graft_sessions_late")
       .outputMode("append").start()
     try {
@@ -294,8 +255,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       input.addData(SessionEvent(2L, 4L, ts(101)))
       q.processAllAvailable()
       // ts(20) is now BELOW the watermark: without the late filter it would
-      // stretch user 1's open session to [0, 20] before ts(200) closes it —
-      // diverging from the batch q13 semantics the watermark contract pins
+      // land in a user-1 session ending at ts(20) before ts(200) opens the
+      // next — diverging from the batch q13 semantics the watermark pins
       input.addData(SessionEvent(1L, 5L, ts(20)), SessionEvent(1L, 6L, ts(200)))
       q.processAllAvailable()
       val all = spark.table("graft_sessions_late").as[ClosedSession].collect().toSeq
@@ -324,14 +285,14 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       // u1 opens [0, 10]
       input.addData(SessionEvent(1L, 1L, ts(0)), SessionEvent(1L, 2L, ts(10)))
       q.processAllAvailable()
-      // ts(320) crosses the gap: the EAGER variant would close [0,10] HERE;
-      // the buffered variant keeps it (10+30 > wm, still extendable).
+      // ts(320) crosses the gap: an eager close would emit [0,10] HERE;
+      // the buffer keeps it (10+30 > wm, still extendable).
       // Watermark advances to 320-300 = 20 (visible next batch).
       input.addData(SessionEvent(1L, 3L, ts(320)))
       q.processAllAvailable()
       assert(spark.table("graft_sessions_buf").count() == 0)
       // late-but-ALLOWED event (ts(30) >= wm 20) arrives after the crossing
-      // event: batch truth merges it into [0..30]; the eager variant would
+      // event: batch truth merges it into [0..30]; an eager close would
       // mis-attribute it to the newer [320] session
       input.addData(SessionEvent(1L, 4L, ts(30)))
       q.processAllAvailable()
